@@ -11,9 +11,10 @@ object Bench {
       .agg(count(lit(1)), bit_xor(col("_h"))).collect()
     ()
   }
+  /** Cores of the `local[n]` master and its shuffle width. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

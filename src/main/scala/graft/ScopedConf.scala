@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Temporarily override a session conf for a code block, restoring the
   * previous value after. Used to size shuffle width to the DATA a
   * specific operator moves rather than the session default: streaming
-  * state stores (EventsStream) and iterative graph rounds
+  * state stores (graft.streaming.Streams) and iterative graph rounds
   * (Clusters.connectedComponents) pay per-partition fixed costs every
   * micro-batch / round, so an over-partitioned small relation turns
   * into pure scheduling overhead, while the session-wide setting stays

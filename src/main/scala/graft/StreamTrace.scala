@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only streaming dissector: runs one registered STREAMING query and
   * prints every micro-batch's progress-duration breakdown (addBatch,
   * walCommit, stateStore commit times, rows) — attributes a streaming
   * row's wall to batch COUNT vs per-batch work (r17 VERDICT ask #5).
+  * Each run also prints its Janino compile count: a repeat run of the
+  * same op should compile nothing (see graft.streaming.Streams).
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.StreamTrace <query> [n]"
   */
 object StreamTrace {
@@ -13,7 +16,7 @@ object StreamTrace {
     val name = args.headOption.getOrElse(sys.error("usage: StreamTrace <query> [n]"))
     val n = args.lift(1).map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -46,6 +49,7 @@ object StreamTrace {
     spark.range(1000000).selectExpr("sum(id)").collect()
     (1 to n).foreach { run =>
       progressLines.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val t1 = System.nanoTime()
@@ -54,7 +58,8 @@ object StreamTrace {
       OperatorCaches.release()
       Thread.sleep(500) // listener bus drain
       println(f"=== run $run: construct(+stream) ${(t1 - t0) / 1e9}%.2fs " +
-        f"drain ${(t2 - t1) / 1e9}%.2fs")
+        f"drain ${(t2 - t1) / 1e9}%.2fs " +
+        s"compiles ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0}")
       progressLines.forEach(l => println(l))
     }
     spark.stop()

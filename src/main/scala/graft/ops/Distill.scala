@@ -395,7 +395,6 @@ object Distill {
   //         rollup is the batch q195 form over the sink files, oracle
   //         q195Sql VERBATIM — a green hash proves gate ≡ batch filter. ─
   def q201(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
     val w = trainWeights(s, dir) // frozen: read + collected pre-stream
     val fixDir = graft.Fixtures.path("docsgate", dir)(
@@ -420,11 +419,10 @@ object Distill {
       s.readStream.schema(schema).parquet(fixDir), w)
       .select(col("doc_id"), col("source"), col("y"),
         (col("num") >= 0L).as("pred"))
-    val query = scored.writeStream.format("parquet")
+    graft.streaming.Streams.run(s, scored.writeStream.format("parquet")
       .option("checkpointLocation", s"$sinkRoot/ck")
       .option("path", s"$sinkRoot/out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
+      .outputMode("append"))
     s.read.parquet(s"$sinkRoot/out")
       .groupBy(col("source"))
       .agg(

@@ -269,7 +269,6 @@ object Importance {
   //        production form; the registered query keeps exact words so
   //        DuckDB replays the scores bit-for-bit).
   def q178(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
     // FROZEN for real: the 1-row model materializes eagerly BEFORE the
     // stream starts — without this the whole corpus-wide fit would
@@ -287,8 +286,6 @@ object Importance {
       StructField("doc_id", LongType),
       StructField("ts", TimestampType),
       StructField("text", StringType)))
-    val qn = "q178_stream_dsir_sink"
-    s.catalog.dropTempView(qn)
     val scored = s.readStream.schema(schema).parquet(fixDir)
       .withColumn("_k", lit(1))
       .join(model.withColumn("_k", lit(1)), Seq("_k"))
@@ -301,10 +298,8 @@ object Importance {
           .as("llr_e7"))
       .select(col("doc_id"), col("n_tokens"), col("llr_e7"),
         when(col("llr_e7") > 0, 1L).otherwise(0L).as("selected"))
-    val query = scored.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("doc_id"))
+    graft.streaming.Streams.toMemory(s, "q178_stream_dsir_sink", scored, "append")
+      .orderBy(col("doc_id"))
   }
 
   val q178Sql: String =

@@ -81,26 +81,6 @@ object EventsStream {
     }
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` scoped to `n` — the
-    * knob that sizes STREAMING STATE, not just shuffle width. A stateful
-    * streaming query creates one state store per shuffle partition per
-    * stateful operator (a stream-stream join keeps FOUR per partition:
-    * keyToNumValues + keyWithIndexToValue on each side), and every store
-    * pays a checkpoint commit per micro-batch regardless of how little
-    * data it holds. So the right size tracks per-trigger volume, not CPU
-    * count: 32 partitions would mean 128 near-empty stores per batch for
-    * q91. At 8 (32 stores), graft.StreamTrace on q91 at sf0.1 and 4 cores
-    * shows a summed state-store commitTimeMs of 0.25-0.30 s on the 200k-row
-    * batch (trigger 1.5-1.8 s) and 0.14-0.23 s on the no-data batch. On
-    * Hadoop's stock local filesystem the same trace shows 2.4-2.6 s per
-    * batch, mostly a chmod/readlink process start per state file rather
-    * than the commit itself (see graft.fs). On a real cluster you raise
-    * the count with throughput and switch the provider to RocksDB once
-    * state outgrows the heap. Partition count never changes results —
-    * only where keys land. */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    graft.ScopedConf.withShufflePartitions(s, n)(body)
-
   /** Tumbling 1-hour windowed rollup with a 2-hour watermark — the
     * streaming form of batch q24 (graft.ops.Events). */
   def hourlyCounts(events: DataFrame): DataFrame =
@@ -156,10 +136,7 @@ object EventsStream {
   //        sink table. Complete mode (not append): at end-of-input the
   //        final watermark would withhold the trailing window in append
   //        mode, silently dropping the last hour.
-  def q62(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q62_events_hourly_stream_sink"
-    s.catalog.dropTempView(qn)
+  def q62(s: SparkSession, dir: String): DataFrame = {
     val agg = readEventsTable(s, s"$dir/events.parquet")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
@@ -168,10 +145,8 @@ object EventsStream {
         (sum(graft.Fns.cents(col("value"))) / count(lit(1)) / 100.0).as("avg_value"))
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("sum_value"), col("avg_value"))
-    val query = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("hour_start"), col("event_type"))
+    Streams.toMemory(s, "q62_events_hourly_stream_sink", agg, "complete")
+      .orderBy(col("hour_start"), col("event_type"))
   }
 
   // ── q71: the streaming face of batch q43 — gap-based session windows as
@@ -180,20 +155,15 @@ object EventsStream {
   //        memory sink, verified by the same gap-walk oracle SQL as q43.
   //        Complete mode for the same end-of-input reason as q62: append
   //        would withhold every session inside the final watermark.
-  def q71(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q71_sessions_stream_sink"
-    s.catalog.dropTempView(qn)
+  def q71(s: SparkSession, dir: String): DataFrame = {
     val agg = readEventsTable(s, s"$dir/events.parquet")
       .groupBy(col("user_id"),
         session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"), col("sw.start").as("session_start"),
         col("sw.end").as("session_end_w"), col("n_events"))
-    val query = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("user_id"), col("session_start"))
+    Streams.toMemory(s, "q71_sessions_stream_sink", agg, "complete")
+      .orderBy(col("user_id"), col("session_start"))
   }
 
   // ── q81: the streaming face of batch q78 — SLIDING windows as a
@@ -201,10 +171,7 @@ object EventsStream {
   //        states), AvailableNow into a memory sink, verified by q78's
   //        unchanged hop-expansion oracle. Complete mode for the same
   //        end-of-input reason as q62.
-  def q81(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q81_hopping_stream_sink"
-    s.catalog.dropTempView(qn)
+  def q81(s: SparkSession, dir: String): DataFrame = {
     val agg = readEventsTable(s, s"$dir/events.parquet")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       .agg(
@@ -212,59 +179,15 @@ object EventsStream {
         (sum(graft.Fns.cents(col("value"))) / 100.0).as("total_value"))
       .select(col("window.start").as("win_start"), col("n_events"),
         col("total_value"))
-    val query = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("win_start"))
+    Streams.toMemory(s, "q81_hopping_stream_sink", agg, "complete")
+      .orderBy(col("win_start"))
   }
 
-  // ── q91: STREAM-STREAM interval join — errors joined to the same
-  //        user's clicks within the preceding 10 minutes (inclusive),
-  //        both sides watermarked so the join state is bounded by the
-  //        time-range condition (the production stream-stream shape).
-  //        Inner joins emit on match in append mode; AvailableNow drains
-  //        the file source, so the output set is deterministic and a
-  //        batch interval-join SQL oracles it exactly.
-  def q91(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q91_interval_join_stream_sink"
-    s.catalog.dropTempView(qn)
-    val ev = readEventsTable(s, s"$dir/events.parquet")
-    val errors = ev.where(col("event_type") === "error")
-      .select(col("event_id").as("e_id"), col("user_id").as("e_user"),
-        col("ts").as("e_ts"))
-      .withWatermark("e_ts", "1 hour")
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val joined = errors.join(clicks,
-      col("e_user") === col("c_user") &&
-        col("c_ts") <= col("e_ts") &&
-        col("c_ts") >= col("e_ts") - expr("INTERVAL 10 MINUTES"))
-    val query = joined.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).select(col("e_id"), col("e_user"), col("e_ts"),
-        col("c_id"), col("c_ts"))
-      .orderBy(col("e_id"), col("c_id"))
-  }
-
-  // ── q161: STREAM-STREAM LEFT OUTER interval join — q91's inner form
-  //        emits only matches; the outer form must ALSO emit each
-  //        unmatched error once its join state is evicted (no click can
-  //        still arrive). Emission is watermark-gated, so the registered
-  //        result is: all matches + the null-extended errors whose event
-  //        time fell below the FINAL watermark (global max e_ts − 1h with
-  //        AvailableNow draining the file source — deterministic). The
-  //        oracle encodes exactly that semantics in batch SQL: a LEFT
-  //        JOIN whose null-extended rows are kept only below the final
-  //        watermark — so the driver hash pins Spark's outer-emission
-  //        rule, not just the match set.
-  def q161(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q161_stream_outer_sink"
-    s.catalog.dropTempView(qn)
+  /** Errors joined (`joinType`) to the same user's clicks within the
+    * preceding 10 minutes (inclusive), both sides watermarked so the join
+    * state is bounded by the time-range condition — q91 and q161. */
+  private def errorClicks(s: SparkSession, dir: String, joinType: String,
+      sink: String): DataFrame = {
     val ev = readEventsTable(s, s"$dir/events.parquet")
     val errors = ev.where(col("event_type") === "error")
       .select(col("event_id").as("e_id"), col("user_id").as("e_user"),
@@ -278,14 +201,32 @@ object EventsStream {
       col("e_user") === col("c_user") &&
         col("c_ts") <= col("e_ts") &&
         col("c_ts") >= col("e_ts") - expr("INTERVAL 10 MINUTES"),
-      "left_outer")
-    val query = joined.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).select(col("e_id"), col("e_user"), col("e_ts"),
-        col("c_id"), col("c_ts"))
+      joinType)
+    Streams.toMemory(s, sink, joined, "append")
+      .select(col("e_id"), col("e_user"), col("e_ts"), col("c_id"), col("c_ts"))
       .orderBy(col("e_id"), col("c_id"))
   }
+
+  // ── q91: STREAM-STREAM interval join — the production stream-stream
+  //        shape. Inner joins emit on match in append mode; AvailableNow
+  //        drains the file source, so the output set is deterministic and
+  //        a batch interval-join SQL oracles it exactly.
+  def q91(s: SparkSession, dir: String): DataFrame =
+    errorClicks(s, dir, "inner", "q91_interval_join_stream_sink")
+
+  // ── q161: STREAM-STREAM LEFT OUTER interval join — q91's inner form
+  //        emits only matches; the outer form must ALSO emit each
+  //        unmatched error once its join state is evicted (no click can
+  //        still arrive). Emission is watermark-gated, so the registered
+  //        result is: all matches + the null-extended errors whose event
+  //        time fell below the FINAL watermark (global max e_ts − 1h with
+  //        AvailableNow draining the file source — deterministic). The
+  //        oracle encodes exactly that semantics in batch SQL: a LEFT
+  //        JOIN whose null-extended rows are kept only below the final
+  //        watermark — so the driver hash pins Spark's outer-emission
+  //        rule, not just the match set.
+  def q161(s: SparkSession, dir: String): DataFrame =
+    errorClicks(s, dir, "left_outer", "q161_stream_outer_sink")
 
   val q161Sql: String =
     """WITH errors AS (
@@ -325,8 +266,7 @@ object EventsStream {
   //        surviving text (identical across a dup group), so the result
   //        set is deterministic whatever arrival order the file source
   //        picks, and the batch oracle is DISTINCT sha256(text).
-  def q113(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q113(s: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.documents(s, dir)
       .select(col("doc_id"),
         expr("timestamp_micros(doc_id * 1000000)").as("ts"), col("text"))
@@ -339,8 +279,6 @@ object EventsStream {
       StructField("doc_id", LongType),
       StructField("ts", TimestampType),
       StructField("text", StringType)))
-    val qn = "q113_dedup_stream_sink"
-    s.catalog.dropTempView(qn)
     // watermark horizon must cover the WHOLE fixture ts span (doc_id
     // seconds → days at bench SF): the global-DISTINCT oracle is only
     // equivalent while no duplicate pair straddles an evicted horizon,
@@ -352,10 +290,8 @@ object EventsStream {
       s.readStream.schema(schema).parquet(fixDir), "ts", "text",
       watermarkDelay = "30 days")
       .select(sha2(col("text"), 256).as("fp"))
-    val query = deduped.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("fp"))
+    Streams.toMemory(s, "q113_dedup_stream_sink", deduped, "append")
+      .orderBy(col("fp"))
   }
 
   val q113Sql: String =
@@ -372,8 +308,7 @@ object EventsStream {
   //        text digest (identical across a dup group), so the result is
   //        arrival-order-invariant and the batch oracle is the chunker
   //        over DISTINCT text.
-  def q136(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q136(s: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.documents(s, dir)
       .select(col("doc_id"),
         expr("timestamp_micros(doc_id * 1000000)").as("ts"), col("text"))
@@ -386,8 +321,6 @@ object EventsStream {
       StructField("doc_id", LongType),
       StructField("ts", TimestampType),
       StructField("text", StringType)))
-    val qn = "q136_stream_chunks_sink"
-    s.catalog.dropTempView(qn)
     val deduped = dedupDocsByContent(
       s.readStream.schema(schema).parquet(fixDir), "ts", "text",
       watermarkDelay = "30 days")
@@ -402,10 +335,8 @@ object EventsStream {
         md5(concat_ws(" ",
           slice(col("toks"), (col("chunk_idx") * 48 + 1).cast("int"), lit(64))))
           .as("chunk_md5"))
-    val query = chunks.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("fp"), col("chunk_idx"))
+    Streams.toMemory(s, "q136_stream_chunks_sink", chunks, "append")
+      .orderBy(col("fp"), col("chunk_idx"))
   }
 
   val q136Sql: String =
@@ -429,10 +360,7 @@ object EventsStream {
   //         cents q24 money discipline. Complete mode + AvailableNow for
   //         the same end-of-input reasons as q62; the same join+rollup in
   //         batch SQL oracles it exactly.
-  def q126(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q126_stream_enrich_sink"
-    s.catalog.dropTempView(qn)
+  def q126(s: SparkSession, dir: String): DataFrame = {
     val dim = graft.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val agg = readEventsTable(s, s"$dir/events.parquet")
@@ -443,10 +371,8 @@ object EventsStream {
       .select(col("window.start").as("hour_start"),
         col("c_mktsegment").as("segment"), col("n_events"),
         col("sum_value"))
-    val query = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("hour_start"), col("segment"))
+    Streams.toMemory(s, "q126_stream_enrich_sink", agg, "complete")
+      .orderBy(col("hour_start"), col("segment"))
   }
 
   val q126Sql: String =
@@ -467,8 +393,7 @@ object EventsStream {
   //         The registered result reads BOTH sinks back keyed by text
   //         digest, so it is arrival-order- and batching-invariant; the
   //         oracle is the same gate over DISTINCT text in batch SQL.
-  def q146(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
+  def q146(s: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.documents(s, dir)
       .select(col("doc_id"),
         expr("timestamp_micros(doc_id * 1000000)").as("ts"), col("text"))
@@ -491,8 +416,7 @@ object EventsStream {
       .select(sha2(col("text"), 256).as("fp"),
         when(graft.ops.TextQueries.qualityLogit(col("text")) >= 21200L,
           "accept").otherwise("quarantine").as("verdict"))
-    val query = writeViaForeachBatch(gated, "q146_stream_gate",
-        Some(Trigger.AvailableNow())) { (batch, id) =>
+    writeViaForeachBatch(gated, "q146_stream_gate") { (batch, id) =>
       val b = batch.persist()
       try {
         b.filter(col("verdict") === "accept").select("fp")
@@ -501,7 +425,6 @@ object EventsStream {
           .write.mode("overwrite").parquet(s"$outRoot/quarantine/b$id")
       } finally b.unpersist()
     }
-    query.awaitTermination()
     def side(name: String): DataFrame = {
       val subs = Option(new java.io.File(s"$outRoot/$name").listFiles())
         .map(_.filter(_.isDirectory).map(_.getAbsolutePath).toIndexedSeq)
@@ -541,10 +464,7 @@ object EventsStream {
   //         batch single-pass sketch bit-for-bit (StreamingSpec pins it);
   //         registers are graft.ops.Rhll rows, so the DuckDB oracle
   //         replays the estimate hash-exactly.
-  def q155(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, 8) {
-    import org.apache.spark.sql.streaming.Trigger
-    val qn = "q155_stream_hll_sink"
-    s.catalog.dropTempView(qn)
+  def q155(s: SparkSession, dir: String): DataFrame = {
     val h = xxhash64(col("user_id"))
     val agg = readEventsTable(s, s"$dir/events.parquet")
       // NULL user_id: xxhash64(NULL)=seed would sketch a phantom distinct
@@ -557,13 +477,11 @@ object EventsStream {
       .agg(max(col("r0")).as("r"))
       .select(col("window.start").cast("date").as("day"), col("event_type"),
         col("bucket"), col("r"))
-    val query = agg.writeStream.format("memory").queryName(qn)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
     // finishing estimate over the end-of-stream registers (batch side —
     // the sink IS the sketch; the estimate is a report over it)
-    graft.ops.Rhll.estimate(s.table(qn), Seq("day", "event_type"), 52,
-        "est_users")
+    graft.ops.Rhll.estimate(
+        Streams.toMemory(s, "q155_stream_hll_sink", agg, "complete"),
+        Seq("day", "event_type"), 52, "est_users")
       .orderBy(col("day"), col("event_type"))
   }
 
@@ -608,16 +526,12 @@ object EventsStream {
 
   /** foreachBatch sink: per-micro-batch handoff to an arbitrary batch
     * writer (idempotent by batchId — the reference's "write stage output
-    * to the warehouse" boundary, streaming edition). */
-  def writeViaForeachBatch(df: DataFrame, queryName: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      writer: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = df.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .foreachBatch(writer)
-    trigger.fold(w)(w.trigger).start()
-  }
+    * to the warehouse" boundary, streaming edition), run to the end of
+    * `df`'s input through [[Streams.run]]. */
+  def writeViaForeachBatch(df: DataFrame, queryName: String)(
+      writer: (DataFrame, Long) => Unit): Unit =
+    Streams.run(df.sparkSession,
+      df.writeStream.queryName(queryName).outputMode("append").foreachBatch(writer))
 
   final case class Evt(event_id: Long, ts: Long, user_id: Long)
   final case class SessionState(startUs: Long, lastUs: Long, nEvents: Int)

@@ -25,49 +25,43 @@ object MediaStream {
   //        oracle replays every aHash from the sha256 hex-pair LUT over
   //        the same variant universe — a green hash proves the stream
   //        decoded real pixels AND deduplicated on them.
-  def q171(s: SparkSession, dir: String): DataFrame =
-    graft.ScopedConf.withShufflePartitions(s, 8) {
-      import org.apache.spark.sql.streaming.Trigger
-      import s.implicits._
-      val fixDir = graft.Fixtures.path("pngstream", dir) {
-        // base at t = id seconds; re-encodes/perturbed replay later
-        graft.operators.Multimodal.pngVariantsTable(s, dir)
-          .select(col("doc_id").as("media_id"),
-            expr("""timestamp_micros(
-                      (doc_id % 1000000000) * 1000000 +
-                      (doc_id div 1000000000) * 1800000000)""").as("ts"),
-            col("payload"))
-      }
-      val schema = StructType(Seq(
-        StructField("media_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("payload", BinaryType)))
-      val qn = "q171_media_stream_sink"
-      s.catalog.dropTempView(qn)
-      val hashed = s.readStream.schema(schema).parquet(fixDir)
-        .as[(Long, java.sql.Timestamp, Array[Byte])]
-        .mapPartitions { it =>
-          javax.imageio.ImageIO.setUseCache(false)
-          it.map { case (id, ts, payload) =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            require(img != null, s"media_id=$id: not a decodable image")
-            (id, ts, f"${graft.operators.Multimodal.aHash64(img)}%016X")
-          }
-        }.toDF("media_id", "ts", "ahash_hex")
-      // same horizon reasoning as q113: AvailableNow may split the input
-      // into several micro-batches, so the horizon must cover the whole
-      // fixture span for the global-DISTINCT oracle to hold; hash-only
-      // state keeps the wide horizon ~free.
-      val deduped = hashed
-        .withWatermark("ts", "30 days")
-        .dropDuplicatesWithinWatermark("ahash_hex")
-        .select(col("ahash_hex"))
-      val query = deduped.writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy(col("ahash_hex"))
+  def q171(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val fixDir = graft.Fixtures.path("pngstream", dir) {
+      // base at t = id seconds; re-encodes/perturbed replay later
+      graft.operators.Multimodal.pngVariantsTable(s, dir)
+        .select(col("doc_id").as("media_id"),
+          expr("""timestamp_micros(
+                    (doc_id % 1000000000) * 1000000 +
+                    (doc_id div 1000000000) * 1800000000)""").as("ts"),
+          col("payload"))
     }
+    val schema = StructType(Seq(
+      StructField("media_id", LongType),
+      StructField("ts", TimestampType),
+      StructField("payload", BinaryType)))
+    val hashed = s.readStream.schema(schema).parquet(fixDir)
+      .as[(Long, java.sql.Timestamp, Array[Byte])]
+      .mapPartitions { it =>
+        javax.imageio.ImageIO.setUseCache(false)
+        it.map { case (id, ts, payload) =>
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(payload))
+          require(img != null, s"media_id=$id: not a decodable image")
+          (id, ts, f"${graft.operators.Multimodal.aHash64(img)}%016X")
+        }
+      }.toDF("media_id", "ts", "ahash_hex")
+    // same horizon reasoning as q113: AvailableNow may split the input
+    // into several micro-batches, so the horizon must cover the whole
+    // fixture span for the global-DISTINCT oracle to hold; hash-only
+    // state keeps the wide horizon ~free.
+    val deduped = hashed
+      .withWatermark("ts", "30 days")
+      .dropDuplicatesWithinWatermark("ahash_hex")
+      .select(col("ahash_hex"))
+    Streams.toMemory(s, "q171_media_stream_sink", deduped, "append")
+      .orderBy(col("ahash_hex"))
+  }
 
   // Oracle: the DISTINCT perceptual hash set over the variant universe,
   // every hash rebuilt codec-free — pixels from the sha256 hex-pair LUT

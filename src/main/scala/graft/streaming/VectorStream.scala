@@ -62,7 +62,6 @@ object VectorStream {
   //        split the input into any number of micro-batches — the gate is
   //        stateless, so the result is the batch screen regardless.
   def q175(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = graft.Tables.embeddings(s, dir)
       .select(col("vec_id"),
         expr("timestamp_micros(vec_id * 1000000)").as("ts"),
@@ -72,14 +71,10 @@ object VectorStream {
       StructField("vec_id", LongType),
       StructField("ts", TimestampType),
       StructField("embedding", ArrayType(FloatType))))
-    val qn = "q175_stream_decontam_sink"
-    s.catalog.dropTempView(qn)
     val gated = screen(
       s.readStream.schema(schema).parquet(fixDir), evalSet(s, dir))
-    val query = gated.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    s.table(qn).orderBy(col("vec_id"))
+    Streams.toMemory(s, "q175_stream_decontam_sink", gated, "append")
+      .orderBy(col("vec_id"))
   }
 
   // LEFT JOIN (not CROSS) so the empty-reference edge agrees with the

@@ -92,12 +92,11 @@ class StreamingSpec extends SparkTestBase {
   test("foreachBatch sink hands each micro-batch to the batch writer") {
     val got = new java.util.concurrent.atomic.AtomicLong(0)
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = EventsStream.writeViaForeachBatch(
+    EventsStream.writeViaForeachBatch(
       EventsStream.readEvents(spark, eventsDir), "fb_out") { (batch, _) =>
       batches.incrementAndGet()
       got.addAndGet(batch.count())
     }
-    try q.processAllAvailable() finally q.stop()
     assert(batches.get() >= 1)
     assert(got.get() == Tables.events(spark, sfDir).count())
   }
