@@ -14,13 +14,18 @@ object ScopedConf {
   def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
     withConf(s, "spark.sql.shuffle.partitions", n.toString)(body)
 
-  def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T = {
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
+  def withConf[T](s: SparkSession, key: String, value: String)(body: => T): T =
+    withConfs(s, key -> value)(body)
+
+  /** Set every `(key, value)` for `body`, then restore each key to its
+    * previous value (or unset it), in reverse order. */
+  def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+    finally prev.reverseIterator.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
     }
   }
 }

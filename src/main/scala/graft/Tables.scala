@@ -1,6 +1,15 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, GlobFilter, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Parquet fixture loaders (TESTDATA.md). One parquet file per table under
   * `sfDir`. Schemas come from the parquet footers — deterministic,
@@ -51,7 +60,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = table(s, d, "lineitem")
   /** events.ts normalization: the fixture generator has shipped this
     * column as TIMESTAMP(NANOS) (rounds 1–5) and as TIMESTAMP_NTZ micros
-    * (round 6+), so the loader dispatches on the ACTUAL footer type:
+    * (round 6+), so the loader dispatches on the ACTUAL footer type
+    * ([[eventsTsType]], then [[microsTs]]):
     *  - NANOS parquet (vectorized reader rejects it) → read as raw long
     *    nanos via the legacy conf, truncate to µs with exact integer
     *    division — the same ns→µs truncation DuckDB applies on scan;
@@ -64,19 +74,77 @@ object Tables {
     * queries and oracles are encoding-independent.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = table(s, d, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts")
-            .cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
+    eventsTsType(s, s"$d/events.parquet") // a NANOS footer needs nanosAsLong to read
+    microsTs(table(s, d, "events"))
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The type Spark infers for the events `ts` column under `path` (a
+    * file, or a directory narrowed by `globFilter`), read on the driver
+    * from ONE footer with no Spark job: `spark.read.parquet(dir).schema`
+    * lists the files and then reads footers in a `parallelize`/`collect`
+    * job, one per run of every events stream op. The footer goes through
+    * Spark's own `ParquetFileFormat.readSchemaFromFooter` and
+    * `ParquetToSparkSchemaConverter`, so the answer is the one inference
+    * would give: `TIMESTAMP(NANOS)` → `LongType` (raw nanos), a
+    * Spark-written footer → the schema Spark stored in it. The file is
+    * the first by name in a depth-first walk that skips `_`/`.` entries
+    * (`_SUCCESS`, `.crc`) and keeps only files `globFilter` accepts; with
+    * no such file the stream is empty whatever the type, and the answer
+    * is `TimestampType`.
+    *
+    * The legacy `TIMESTAMP(NANOS)` encoding is the one case that still
+    * sets `spark.sql.legacy.parquet.nanosAsLong=true` on `s`, and leaves
+    * it set: the scan reads the column under the session conf at
+    * execution, after this returns, and rejects NANOS without it. Every
+    * other encoding leaves the session conf as it found it. */
+  private[graft] def eventsTsType(s: SparkSession, path: String,
+      globFilter: Option[String] = None): DataType = {
+    val hadoopConf = s.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    val glob = globFilter.map(new GlobFilter(_))
+    def hidden(f: FileStatus): Boolean = {
+      val n = f.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    def first(f: FileStatus): Option[FileStatus] =
+      if (f.isFile) Option.when(glob.forall(_.accept(f.getPath)))(f)
+      else fs.listStatus(f.getPath).filterNot(hidden)
+        .sortBy(_.getPath.getName).iterator.flatMap(first).nextOption()
+    val file = try first(fs.getFileStatus(root))
+      catch { case _: java.io.FileNotFoundException => None }
+    file.fold(TimestampType: DataType) { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf),
+        HadoopReadOptions.builder(hadoopConf)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+      val footer = try reader.getFooter finally reader.close()
+      val conf = s.sessionState.conf.clone()
+      conf.setConfString(NanosAsLong, "true")
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, footer), new ParquetToSparkSchemaConverter(conf))
+      val columns: GroupType = footer.getFileMetaData.getSchema
+      columns.getType("ts").getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS =>
+          s.conf.set(NanosAsLong, "true")
+        case _ =>
+      }
+      schema("ts").dataType
     }
   }
+
+  /** `df` with its `ts` column as µs TimestampType, whatever the column
+    * holds: raw long nanos are truncated to µs, NTZ is cast under the
+    * session time zone (see [[events]]). */
+  private[graft] def microsTs(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+      case _ => df
+    }
+
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

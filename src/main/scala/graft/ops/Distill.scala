@@ -419,10 +419,9 @@ object Distill {
       s.readStream.schema(schema).parquet(fixDir), w)
       .select(col("doc_id"), col("source"), col("y"),
         (col("num") >= 0L).as("pred"))
-    graft.streaming.Streams.run(s, scored.writeStream.format("parquet")
+    graft.streaming.Streams.run(scored, "append")(_.format("parquet")
       .option("checkpointLocation", s"$sinkRoot/ck")
-      .option("path", s"$sinkRoot/out")
-      .outputMode("append"))
+      .option("path", s"$sinkRoot/out"))
     s.read.parquet(s"$sinkRoot/out")
       .groupBy(col("source"))
       .agg(

@@ -54,31 +54,20 @@ object EventsStream {
   /** Directory form of the events stream (see [[readEventsTable]], which
     * callers should prefer — it handles both physical layouts).
     *
-    * The file-stream source needs an explicit schema, so probe the footer
-    * type with a batch read first (one footer, no data scan), then apply
-    * the same normalization as graft.Tables.events: whatever the parquet
-    * encoding, the stream carries µs TimestampType and every downstream
-    * watermark/window sees identical instants (session tz is UTC, so the
-    * NTZ cast is wall-clock-exact).
+    * The file-stream source needs an explicit schema, so the `ts` type is
+    * read from one footer on the driver first (graft.Tables.eventsTsType,
+    * no Spark job), then the stream gets the same normalization as
+    * graft.Tables.events: whatever the parquet encoding, the stream
+    * carries µs TimestampType and every downstream watermark/window sees
+    * identical instants (session tz is UTC, so the NTZ cast is
+    * wall-clock-exact).
     */
   def readEvents(spark: SparkSession, dir: String,
       globFilter: Option[String] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = spark.read
-    globFilter.foreach(g => probe.option("pathGlobFilter", g))
-    // Empty fixture (no matching files / zero row groups) → nothing to
-    // probe and nothing to convert; any ts type yields the same empty
-    // stream, so default to plain TimestampType.
-    val tsType = scala.util.Try(probe.parquet(dir).schema("ts").dataType)
-      .getOrElse(TimestampType: org.apache.spark.sql.types.DataType)
-    val reader = spark.readStream.schema(rawSchema(tsType))
+    val reader = spark.readStream
+      .schema(rawSchema(graft.Tables.eventsTsType(spark, dir, globFilter)))
     globFilter.foreach(g => reader.option("pathGlobFilter", g))
-    val df = reader.parquet(dir)
-    tsType match {
-      case LongType => df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => df
-    }
+    graft.Tables.microsTs(reader.parquet(dir))
   }
 
   /** Tumbling 1-hour windowed rollup with a 2-hour watermark — the
@@ -530,8 +519,7 @@ object EventsStream {
     * `df`'s input through [[Streams.run]]. */
   def writeViaForeachBatch(df: DataFrame, queryName: String)(
       writer: (DataFrame, Long) => Unit): Unit =
-    Streams.run(df.sparkSession,
-      df.writeStream.queryName(queryName).outputMode("append").foreachBatch(writer))
+    Streams.run(df, "append")(_.queryName(queryName).foreachBatch(writer))
 
   final case class Evt(event_id: Long, ts: Long, user_id: Long)
   final case class SessionState(startUs: Long, lastUs: Long, nEvents: Int)

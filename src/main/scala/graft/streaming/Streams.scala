@@ -1,14 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, FlatMapGroupsWithState, Join, TransformWithState}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** The one way an engine op runs a streaming query: `Trigger.AvailableNow`
   * to the end of its input, then block until the query terminates.
   *
   * `start()` clones the session, and the clone copies the session conf at
-  * that moment, so two settings are scoped around `start()` alone and the
-  * caller's session keeps its own values for the rest of the op:
+  * that moment, so three settings are scoped around `start()` alone and
+  * the caller's session keeps its own values for the rest of the op:
   *
   *  - `spark.sql.artifact.isolation.enabled=false`. With isolation on, each
   *    clone's jobs run under a new executor class loader, and the codegen
@@ -21,6 +23,15 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *    is the other way round: artifacts a session added (Spark Connect
   *    `addArtifact`) are not visible inside engine streams.
   *  - [[StatePartitions]] shuffle partitions, which size the stream's state.
+  *  - `spark.sql.streaming.noDataMicroBatches.enabled`, decided from the
+  *    analyzed plan by [[keepsNoDataBatches]]. A no-data batch runs after
+  *    the watermark moves and exists only to evict state; it can change
+  *    the answer only where eviction emits rows. Where it cannot, it is
+  *    pure cost: q91's inner join spent 0.6-0.7 s of trigger time per
+  *    run on an empty batch (graft.StreamTrace, sf0.01, 4 cores), and
+  *    dropping it took q91's run from a median of 1.60 to 1.08 s with the
+  *    same drained rows. The setting is set either way, so an op's answer
+  *    never depends on the caller's value.
   */
 object Streams {
 
@@ -45,12 +56,38 @@ object Streams {
     * the count it started with. */
   val StatePartitions = 4
 
-  /** Start `writer` as an AvailableNow query and wait for it to finish. */
-  def run[T](s: SparkSession, writer: DataStreamWriter[T]): Unit = {
-    val query = graft.ScopedConf.withConf(s, "spark.sql.artifact.isolation.enabled", "false") {
-      graft.ScopedConf.withShufflePartitions(s, StatePartitions) {
-        writer.trigger(Trigger.AvailableNow()).start()
-      }
+  /** True when `df`, written in output `mode`, holds a node whose output
+    * can change from a watermark advance alone, so a no-data batch may
+    * emit rows:
+    *  - a stream-stream join other than `Inner` (an outer join emits its
+    *    null-extended rows when their state is evicted — q161);
+    *  - a streaming `Aggregate` in append mode (a window, `session_window`
+    *    included, is emitted once the watermark passes its end);
+    *  - `FlatMapGroupsWithState` or `TransformWithState` (timers and
+    *    timeouts fire on the watermark).
+    * Everything else emits on data alone: an inner join, deduplication,
+    * stream-static joins, stateless plans, and aggregates in complete or
+    * update mode, whose no-data batch only drops state. */
+  def keepsNoDataBatches(df: DataFrame, mode: String): Boolean = {
+    val append = mode.equalsIgnoreCase("append")
+    df.queryExecution.analyzed.exists {
+      case j: Join => j.joinType != Inner && j.left.isStreaming && j.right.isStreaming
+      case a: Aggregate => append && a.isStreaming
+      case _: FlatMapGroupsWithState | _: TransformWithState => true
+      case _ => false
+    }
+  }
+
+  /** Start `df` in output `mode` on the sink `sink` sets up, as an
+    * AvailableNow query, and wait for it to finish. */
+  def run(df: DataFrame, mode: String)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val query = graft.ScopedConf.withConfs(df.sparkSession,
+        "spark.sql.artifact.isolation.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          keepsNoDataBatches(df, mode).toString) {
+      sink(df.writeStream.outputMode(mode)).trigger(Trigger.AvailableNow()).start()
     }
     query.awaitTermination()
   }
@@ -59,7 +96,7 @@ object Streams {
     * the sink's table. */
   def toMemory(s: SparkSession, name: String, df: DataFrame, mode: String): DataFrame = {
     s.catalog.dropTempView(name)
-    run(s, df.writeStream.format("memory").queryName(name).outputMode(mode))
+    run(df, mode)(_.format("memory").queryName(name))
     s.table(name)
   }
 }

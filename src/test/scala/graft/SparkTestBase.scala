@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared SparkSession for the whole forked test JVM. */
@@ -21,6 +28,29 @@ trait SparkTestBase extends AnyFunSuite {
       case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
       case None => spark.conf.unset("spark.sql.codegen.fallback")
     }
+  }
+
+  /** Runs `body` and returns the Janino compiles it caused plus the
+    * progress of every streaming query it ran, all of them terminated. */
+  def traceStreams(body: => Unit): (Long, Seq[StreamingQueryProgress]) = {
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val started = new AtomicInteger()
+    val terminated = new Semaphore(0)
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.release()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      // progress events precede their query's termination event on the bus
+      assert(terminated.tryAcquire(started.get, 60, TimeUnit.SECONDS))
+      (compiles, progress.asScala.toSeq)
+    } finally spark.streams.removeListener(listener)
   }
 
   /** Collect nodes across AQE boundaries: AdaptiveSparkPlanExec and

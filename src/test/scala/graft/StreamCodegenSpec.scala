@@ -1,13 +1,7 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, Semaphore, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.{EventsStream, Streams}
 
@@ -18,34 +12,11 @@ import graft.streaming.{EventsStream, Streams}
   * A bare `start()` of the same plan recompiles on every run. */
 class StreamCodegenSpec extends SparkTestBase {
 
-  /** Runs `body` and returns the Janino compiles it caused plus the
-    * progress of every streaming query it ran, all of them terminated. */
-  private def traced(body: => Unit): (Long, Seq[StreamingQueryProgress]) = {
-    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
-    val started = new AtomicInteger()
-    val terminated = new Semaphore(0)
-    val listener = new StreamingQueryListener {
-      import StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated.release()
-    }
-    spark.streams.addListener(listener)
-    try {
-      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      body
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-      // progress events precede their query's termination event on the bus
-      assert(terminated.tryAcquire(started.get, 60, TimeUnit.SECONDS))
-      (compiles, progress.asScala.toSeq)
-    } finally spark.streams.removeListener(listener)
-  }
-
   test("a repeat run of a registered stream op compiles nothing and keeps state to one wave") {
     def q91(): Unit =
       SparkEntry.queries("q91_interval_join_stream")(spark, sfDir).collect()
-    traced(q91())
-    val (compiles, progress) = traced(q91())
+    traceStreams(q91())
+    val (compiles, progress) = traceStreams(q91())
     assert(compiles == 0, s"the second run compiled $compiles classes")
     val stateOps = progress.flatMap(_.stateOperators)
     assert(stateOps.nonEmpty, "q91 reported no state operator")
@@ -75,16 +46,25 @@ class StreamCodegenSpec extends SparkTestBase {
       spark.table(sink).orderBy(col("e_id"), col("c_id")).collect()
     }
     bare()
-    val (compiles, _) = traced(bare())
+    val (compiles, _) = traceStreams(bare())
     assert(compiles > 0, "a bare start() reused the previous run's classes")
   }
 
   test("every registered stream op leaves the caller's session conf as it found it") {
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.artifact.isolation.enabled")
+    // each key starts from a value the ops' own settings differ from, so
+    // a leak shows: a width no engine stream uses (StatePartitions),
+    // isolation and no-data batches the other way round from what Streams
+    // scopes for most ops, and nanosAsLong explicitly off (the events
+    // readers used to turn it on; the NTZ fixture gives no cause to)
+    val start = Seq(
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.artifact.isolation.enabled" -> "true",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "false")
+    val keys = start.map(_._1)
     // the 14 streaming ops, plus q111's batch frame stream
     val ops = SparkEntry.queries.keys.filter(_.contains("stream")).toSeq.sorted
-    // a width no engine stream uses, so a leaked StatePartitions shows
-    ScopedConf.withShufflePartitions(spark, 3) {
+    ScopedConf.withConfs(spark, start: _*) {
       ops.foreach { q =>
         val before = keys.map(spark.conf.getOption)
         SparkEntry.queries(q)(spark, sfDir)
