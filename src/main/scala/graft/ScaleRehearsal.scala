@@ -35,8 +35,6 @@ object ScaleRehearsal {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // raw events read during generation carries TIMESTAMP(NANOS)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val K = 100000000L // key shift per replica
     val done = new java.io.File(s"$work/_DONE")

@@ -72,10 +72,12 @@ object Endpoints {
       .limit(k)
 
   /** GET /api/airports (api/app.py:291-332): distinct union of both code
-    * columns, sorted. */
+    * columns, sorted. The distinct codes are bounded by the airport-code
+    * domain, so they are sorted on one partition (no range-sampling job). */
   def airports(df: DataFrame, originCol: String, destCol: String): DataFrame =
     df.select(col(originCol).as("airport"))
       .union(df.select(col(destCol).as("airport")))
       .distinct()
+      .coalesce(1)
       .orderBy(col("airport"))
 }

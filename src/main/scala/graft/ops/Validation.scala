@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -29,11 +29,17 @@ object Validation {
     * (not a filter per column). */
   def noNulls(df: DataFrame, cols: Seq[String]): Result = {
     if (cols.isEmpty) return ok
-    val counts = df.select(cols.map(c =>
-      count(when(col(c).isNull, 1)).as(c)): _*).head()
-    val bad = cols.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i) > 0 => s"$c (${counts.getLong(i)} nulls)"
-    }
+    val counts = df.select(cols.map(c => nullCount(c).as(c)): _*).head()
+    nullsVerdict(cols.zipWithIndex.map { case (c, i) => c -> counts.getLong(i) })
+  }
+
+  /** The V2 aggregate for one column: its null count. */
+  def nullCount(c: String): Column = count(when(col(c).isNull, 1))
+
+  /** V2 verdict on (column, null count) pairs — shared by [[noNulls]] and
+    * gates that count nulls inside a larger aggregate. */
+  def nullsVerdict(counts: Seq[(String, Long)]): Result = {
+    val bad = counts.collect { case (c, n) if n > 0 => s"$c ($n nulls)" }
     if (bad.isEmpty) ok else fail(s"nulls in critical columns: ${bad.mkString(", ")}")
   }
 
@@ -82,7 +88,10 @@ object Validation {
 
   /** F6/V6: non-empty input gate. */
   def notEmpty(df: DataFrame): Result =
-    if (df.isEmpty) fail("empty input") else ok
+    if (df.isEmpty) emptyInput else ok
+
+  /** V6 verdict on an input seen to hold no rows. */
+  val emptyInput: Result = fail("empty input")
 
   /** The reference's processed-data gate (process.py:78-123): required
     * columns, critical nulls, flag ranges — combined verdict. */

@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.{Cleaning, Validation}
 
 /** End-to-end batch pipeline — the reference's 6-task Airflow DAG
@@ -14,73 +17,44 @@ import graft.ops.{Cleaning, Validation}
   * plan (the reference writes CSV between every stage); the "load to
   * Postgres" boundary becomes a cached temp view (or `.write.jdbc` against
   * a real warehouse); the two analytic queries run in-engine instead of
-  * being shipped to Postgres; the 4a∥4b fan-out is two actions on one
-  * cached upstream.
+  * being shipped to Postgres; the 4a∥4b∥5 fan-out and the processed-data
+  * gate are ONE grouping-sets aggregate over the cached upstream.
   */
 object Pipeline {
 
+  /** `flights` is the cached processed table; the three metric frames are
+    * local relations, read back with no Spark job. */
   final case class Outputs(
       flights: DataFrame,
       performanceMetrics: DataFrame,
       routeAnalysis: DataFrame,
       apiMetrics: DataFrame)
 
-  /** Per-airline performance metrics — the reference's CTE query
-    * (dags/flight_data_pipeline.py:136-158) in-engine: totals, avg delays,
-    * delayed/on-time conditional counts, on-time percentage, rounded. */
-  def performanceMetrics(flights: DataFrame): DataFrame =
-    flights
-      .groupBy(col("airline"))
-      .agg(
-        count(lit(1)).as("total_flights"),
-        (round(avg(col("departure_delay")) * 100) / 100.0).as("avg_departure_delay"),
-        (round(avg(col("arrival_delay")) * 100) / 100.0).as("avg_arrival_delay"),
-        count(when(col("flight_status") === "Delayed", 1)).as("delayed_flights"),
-        count(when(col("flight_status") === "On Time", 1)).as("ontime_flights"))
-      .withColumn("ontime_percentage",
-        when(col("total_flights") =!= 0,
-          round(col("ontime_flights") / col("total_flights") * 100 * 100) / 100.0))
-      .orderBy(desc("total_flights"), col("airline"))
+  /** The measures of every grain — the reference's CTE query
+    * (dags/flight_data_pipeline.py:136-158): totals, avg delays rounded,
+    * delayed/on-time conditional counts. */
+  private val measures = Seq(
+    count(lit(1)).as("total_flights"),
+    (round(avg(col("departure_delay")) * 100) / 100.0).as("avg_departure_delay"),
+    (round(avg(col("arrival_delay")) * 100) / 100.0).as("avg_arrival_delay"),
+    count(when(col("flight_status") === "Delayed", 1)).as("delayed_flights"),
+    count(when(col("flight_status") === "On Time", 1)).as("ontime_flights"))
 
-  /** Per-route analysis (dags/flight_data_pipeline.py:191-203):
-    * origin/destination grouping with delay averages + on-time pct. */
-  def routeAnalysis(flights: DataFrame): DataFrame =
-    flights
-      .groupBy(col("origin"), col("destination"))
-      .agg(
-        count(lit(1)).as("total_flights"),
-        (round(avg(col("departure_delay")) * 100) / 100.0).as("avg_departure_delay"),
-        count(when(col("flight_status") === "Delayed", 1)).as("delayed_flights"))
-      .withColumn("ontime_percentage",
-        when(col("total_flights") =!= 0,
-          round((col("total_flights") - col("delayed_flights")) /
-            col("total_flights") * 100 * 100) / 100.0))
-      .orderBy(desc("total_flights"), col("origin"), col("destination"))
+  /** V2 columns of the processed-data gate (process.py:78-123). */
+  private val critical = Seq("flight_date", "airline", "origin", "destination")
 
-  /** API metrics (dags/flight_data_pipeline.py:230-258): overall rollup of
-    * the per-airline table (A5 second-level agg) + X15 threshold label. */
-  def apiMetrics(perAirline: DataFrame): DataFrame =
-    perAirline
-      .agg(
-        sum(col("total_flights")).as("total_flights"),
-        sum(col("delayed_flights")).as("total_delayed_flights"),
-        sum(col("ontime_flights")).as("total_ontime_flights"))
-      .withColumn("overall_ontime_percentage",
-        when(col("total_flights") =!= 0,
-          round(col("total_ontime_flights") / col("total_flights") * 100 * 100) / 100.0))
-      .withColumn("status",
-        when(col("overall_ontime_percentage") > 80, "Good")
-          .otherwise("Needs Improvement"))
+  private val keys = Seq("airline", "origin", "destination")
+  // grouping_id over `keys`: one bit per key left out, first key highest
+  private val (perAirline, perRoute, overall) = (3L, 4L, 7L)
 
-  /** Validation gate mirroring process.py:78-123 before the analytic fan-out. */
-  def validate(flights: DataFrame): Validation.Result =
-    Validation.validateProcessed(flights,
-      required = Seq("flight_date", "airline", "origin", "destination",
-        "departure_delay", "arrival_delay", "flight_status"),
-      critical = Seq("flight_date", "airline", "origin", "destination"),
-      flagCols = Nil)
+  private def pct(part: Column, total: Column): Column =
+    when(total =!= 0, round(part / total * 100 * 100) / 100.0)
 
-  /** Run the full DAG on a raw (87-column-style) flight frame. */
+  /** Run the full DAG on a raw (87-column-style) flight frame. One
+    * aggregate computes the per-airline, per-route and overall rows plus
+    * the gate's counts; its result is bounded by the domain (carriers +
+    * routes + 1 rows), so it is sorted on one partition and collected once.
+    * Throws IllegalArgumentException when a gate fails. */
   def run(spark: SparkSession, raw: DataFrame,
       delayThreshold: Double = 15.0): Outputs = {
     // V1 file-content gate BEFORE any transform (ingest.py:63-114 order)
@@ -89,9 +63,45 @@ object Pipeline {
     require(rawCheck.passed, s"ingest validation failed: ${rawCheck.errors.mkString("; ")}")
     val flights = Cleaning.ingestAndProcess(raw, delayThreshold).cache()
     flights.createOrReplaceTempView("flights")
-    val v = validate(flights)
+    val grains = flights
+      .groupingSets(Seq(Seq(col("airline")), Seq(col("origin"), col("destination")), Nil),
+        keys.map(col): _*)
+      .agg(grouping_id().as("_gid"),
+        measures ++ critical.map(c => Validation.nullCount(c).as(s"_null_$c")): _*)
+      .coalesce(1)
+      .orderBy(col("_gid") +: desc("total_flights") +: keys.map(col): _*)
+    val rows = grains.collect().groupBy(_.getAs[Long]("_gid"))
+
+    // V6 (non-empty) + V2 (critical nulls) from the overall row
+    val v = rows.get(overall).fold(Validation.emptyInput)(all =>
+      Validation.nullsVerdict(critical.map(c => c -> all.head.getAs[Long](s"_null_$c"))))
     require(v.passed, s"validation failed: ${v.errors.mkString("; ")}")
-    val perf = performanceMetrics(flights)
-    Outputs(flights, perf, routeAnalysis(flights), apiMetrics(perf))
+
+    // one grain's rows as a local relation: keys typed as in `flights`,
+    // measures as aggregated (or all nullable)
+    def local(gid: Long, key: Seq[String], measure: Seq[String],
+        nullable: Boolean = false): DataFrame = {
+      val fields = key.map(flights.schema(_)) ++ measure.map(grains.schema(_))
+        .map(f => if (nullable) f.copy(nullable = true) else f)
+      spark.createDataFrame(rows(gid).toSeq.map(r =>
+        Row.fromSeq(fields.map(f => r.get(r.fieldIndex(f.name))))).asJava, StructType(fields))
+    }
+    val perf = local(perAirline, Seq("airline"), Seq("total_flights",
+        "avg_departure_delay", "avg_arrival_delay", "delayed_flights", "ontime_flights"))
+      .withColumn("ontime_percentage", pct(col("ontime_flights"), col("total_flights")))
+    val routes = local(perRoute, Seq("origin", "destination"),
+        Seq("total_flights", "avg_departure_delay", "delayed_flights"))
+      .withColumn("ontime_percentage",
+        pct(col("total_flights") - col("delayed_flights"), col("total_flights")))
+    // the overall row as the reference's second-level sum (A5): nullable
+    // counts, + the X15 threshold label
+    val api = local(overall, Nil, Seq("total_flights", "delayed_flights", "ontime_flights"),
+        nullable = true).toDF("total_flights", "total_delayed_flights", "total_ontime_flights")
+      .withColumn("overall_ontime_percentage",
+        pct(col("total_ontime_flights"), col("total_flights")))
+      .withColumn("status",
+        when(col("overall_ontime_percentage") > 80, "Good")
+          .otherwise("Needs Improvement"))
+    Outputs(flights, perf, routes, api)
   }
 }

@@ -118,8 +118,7 @@ object Sources {
   def perFileStats(df: DataFrame, criticalCols: Seq[String]): DataFrame =
     df.groupBy(col("source_file"))
       .agg(count(lit(1)).as("n_rows"),
-        criticalCols.map(c =>
-          count(when(col(c).isNull, 1)).as(s"null_$c")): _*)
+        criticalCols.map(c => graft.ops.Validation.nullCount(c).as(s"null_$c")): _*)
 
   // ── S8: parquet — the primary at-rest format; partitioned layout is the
   //        100 TB default (partition pruning on the date key). */

@@ -24,10 +24,11 @@ class EmptyInputSpec extends SparkTestBase {
       Tables.table(spark, src, t).limit(0)
         .write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
-    // events keeps its raw NANOS-long schema on disk; Tables.events
-    // converts on read, so write the RAW shape empty (nanosAsLong must be
-    // on to read the raw file at all — same trap TESTDATA.md documents)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events keeps the fixture's on-disk `ts` type (NANOS or NTZ µs);
+    // Tables.events converts on read, so write the RAW shape empty. The
+    // footer probe turns nanosAsLong on only for a NANOS footer, which
+    // cannot be read raw without it (the trap TESTDATA.md documents).
+    Tables.eventsTsType(spark, s"$src/events.parquet")
     spark.read.parquet(s"$src/events.parquet").limit(0)
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
@@ -12,7 +10,6 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
@@ -139,29 +136,10 @@ class EventsTsProbeSpec extends SparkTestBase {
   test("readEventsTable starts no Spark job on either layout") {
     val dirLayout = s"${tmpDir("ts_jobs")}/events.parquet"
     Tables.events(spark, sfDir).write.parquet(dirLayout)
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      spark.sparkContext.setJobDescription(name)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      marker("probe-start")
+    val n = jobsOf {
       EventsStream.readEventsTable(spark, s"$sfDir/events.parquet")
       EventsStream.readEventsTable(spark, dirLayout)
-      marker("probe-end")
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("probe-end") && System.nanoTime() < deadline) Thread.sleep(20)
-      val seen = jobs.asScala.toSeq
-      assert(seen.contains("probe-end"), seen)
-      val between = seen.dropWhile(_ != "probe-start").drop(1).takeWhile(_ != "probe-end")
-      assert(between.isEmpty, s"readEventsTable started ${between.size} job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(n == 0, s"readEventsTable started $n job(s)")
   }
 }

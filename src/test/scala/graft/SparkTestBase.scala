@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,6 +52,34 @@ trait SparkTestBase extends AnyFunSuite {
       assert(terminated.tryAcquire(started.get, 60, TimeUnit.SECONDS))
       (compiles, progress.asScala.toSeq)
     } finally spark.streams.removeListener(listener)
+  }
+
+  /** The number of Spark jobs `body` starts, counted on the listener bus
+    * between two marker jobs (so late events of earlier work are not
+    * counted, and every event of `body` has arrived). */
+  def jobsOf(body: => Unit): Int = {
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker("jobs-start")
+      body
+      marker("jobs-end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("jobs-end") && System.nanoTime() < deadline) Thread.sleep(20)
+      val seen = jobs.asScala.toSeq
+      assert(seen.contains("jobs-end"), seen)
+      seen.dropWhile(_ != "jobs-start").drop(1).takeWhile(_ != "jobs-end").size
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Collect nodes across AQE boundaries: AdaptiveSparkPlanExec and
