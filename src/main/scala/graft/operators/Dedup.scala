@@ -361,19 +361,12 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  private def expandInter(repPairs: DataFrame, groups: DataFrame,
-      payload: Seq[String]): DataFrame =
-    GroupExpand.expandInter(repPairs, groups, payload)
-
-  private def intraPairs(groups: DataFrame): DataFrame =
-    GroupExpand.intraPairs(groups)
-
   /** Expansion for jaccardPairs: intra-group pairs carry (shared = group
     * set size, jaccard = 1.0) — exact for identical texts. */
   private def expandGroupPairs(repPairs: DataFrame, groups: DataFrame,
       sizes: DataFrame): DataFrame = {
-    val inter = expandInter(repPairs, groups, Seq("shared", "jaccard"))
-    val intra = intraPairs(groups)
+    val inter = GroupExpand.expandInter(repPairs, groups, Seq("shared", "jaccard"))
+    val intra = GroupExpand.intraPairs(groups)
       .join(sizes.select(col("doc_id").as("rep"), col("n")), "rep")
       .select(col("id_a"), col("id_b"),
         col("n").as("shared"), lit(1.0).as("jaccard"))
@@ -445,7 +438,6 @@ object Dedup {
   private val P = 2147483647L
   private val NumHashes = 64
   private val BandRows = 4
-  private val NumBands = NumHashes / BandRows
 
   /** Deterministic permutation coefficients (fixed seed — signatures are
     * reproducible across runs and clusters). */
@@ -465,31 +457,29 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, textCol: String, idCol: String,
       gram: Int = 1): DataFrame = {
     // NO relational distinct before the 64-min-agg (r17, guide §2.3/§2.4):
-    // at gram=1 (every production caller) h0 depends only on
+    // at gram=1 (every production caller) the staged hash depends only on
     // xxhash64(token), which is exactly what the fused HashedNGrams
     // generator emits PER-DOC-DISTINCT — so the former distinct's full
     // string-keyed shuffle disappears while the 64-min agg still sees one
     // row per distinct (doc, token), and the exchange carries 64 longs
     // per doc instead of every distinct token string. Signatures are
     // bit-identical (HashedNGramsSpec pins the digest parity). gram > 1
-    // keeps the string staging: its h0 hashes the shingle STRING, which
+    // keeps the string staging: its hash digests the shingle STRING, which
     // the window-fold digests deliberately do not reproduce.
     val toks =
       if (gram <= 1)
         docs.select(col(idCol).as("doc_id"),
-            org.apache.spark.sql.graft.HashedNGrams.column(col(textCol), 1)
-              .as("t"))
-          .withColumn("h0", pmod(col("t"), lit(P)))
+          org.apache.spark.sql.graft.HashedNGrams.column(col(textCol), 1).as("t"))
       else
         distinctTokens(docs, textCol, idCol, gram)
-          .withColumn("h0", pmod(xxhash64(col("t")), lit(P)))
-    val aggs = coeffs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h0") * a + b, lit(P))).as(s"m$i")
-    }
-    toks.groupBy(col("doc_id"))
-      .agg(aggs.head, aggs.tail.toIndexedSeq: _*)
+          .select(col("doc_id"), xxhash64(col("t")).as("t"))
+    BandedLsh.signatures(toks, minhashScheme(BandRows))
       .withColumn("sig", array((0 until NumHashes).map(i => col(s"m$i")): _*))
   }
+
+  /** The xxhash64 MinHash scheme at `rows` rows per band. */
+  private[graft] def minhashScheme(rows: Int): SignatureScheme =
+    BandedLsh.xxhash(coeffs, P, rows)
 
   /** LSH candidate pairs: 16 bands × 4 rows; docs sharing any band bucket
     * become candidates; est_jaccard = matching-component fraction of the
@@ -505,10 +495,15 @@ object Dedup {
       gram: Int = 1): DataFrame = {
     val (groups, repPairs) =
       minhashRepPairs(docs, textCol, idCol, gram, BandRows)
-    expandInter(repPairs, groups, Seq("est_jaccard"))
-      .unionByName(intraPairs(groups)
-        .select(col("id_a"), col("id_b"), lit(1.0).as("est_jaccard")))
+    expandCandidates(repPairs, groups)
   }
+
+  /** Rep-level (id_a, id_b, est_jaccard) back to member pairs: inter-group
+    * pairs copy the estimate, intra-group pairs are 1.0. */
+  private def expandCandidates(repPairs: DataFrame, groups: DataFrame): DataFrame =
+    GroupExpand.expandInter(repPairs, groups, Seq("est_jaccard"))
+      .unionByName(GroupExpand.intraPairs(groups)
+        .select(col("id_a"), col("id_b"), lit(1.0).as("est_jaccard")))
 
   /** Signature GROUPS plus REPRESENTATIVE-level candidate pairs
     * (id_a < id_b, est_jaccard) for one banding geometry — the shared
@@ -543,41 +538,8 @@ object Dedup {
     * so the finer pair set is a subset of this one and needs no second
     * band join (the q203 sweep rides on exactly that). */
   private[graft] def repPairsWithSigs(groups: DataFrame,
-      bandRows: Int): DataFrame = {
-    val repSigs = groups.select(col("rep").as("doc_id"), col("sig"))
-      .select(col("doc_id") +: col("sig") +:
-        (0 until NumHashes).map(i => col("sig")(i).as(s"m$i")): _*)
-    val numBands = NumHashes / bandRows
-    val bandCols = (0 until numBands).map { bi =>
-      struct(lit(bi).as("band"),
-        xxhash64(((0 until bandRows).map(j => col(s"m${bi * bandRows + j}")) :+ lit(bi)): _*)
-          .as("bh"))
-    }
-    val buckets = repSigs
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val cand = buckets.as("x")
-      .join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
-    // est as a flat 64-term comparison sum over the joined signature
-    // components — the oracle's estExpr shape. The earlier zip_with +
-    // aggregate HOF form computed the same value but evaluated
-    // INTERPRETED (higher-order functions don't codegen) and allocated a
-    // 64-element array per pair; on q203's r=4 leg (~10^5 rep pairs per
-    // 5k docs) the interpreted eval was the dominant cost.
-    val sa = repSigs.select(col("doc_id").as("id_a") +:
-      (0 until NumHashes).map(i => col(s"m$i").as(s"xa$i")): _*)
-    val sb = repSigs.select(col("doc_id").as("id_b") +:
-      (0 until NumHashes).map(i => col(s"m$i").as(s"xb$i")): _*)
-    val matches = (0 until NumHashes)
-      .map(i => when(col(s"xa$i") === col(s"xb$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("est_jaccard", matches / lit(NumHashes.toDouble))
-  }
+      bandRows: Int): DataFrame =
+    BandedLsh.selfPairs(groups, minhashScheme(bandRows))
 
   /** Banding rows matched to a dedup threshold τ: the largest r (over the
     * fixed 64-hash signature) whose S-curve midpoint (1/b)^(1/r) stays
@@ -766,10 +728,6 @@ object Dedup {
     * 4×2. Still costlier per token than xxhash64 — the production path
     * stays q34; this is the hard-signal correctness twin.
     */
-  private val ShaHashes = 8
-  private val ShaBandRows = 2
-  private val ShaBands = ShaHashes / ShaBandRows
-
   def minhashShaSignatures(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
     // no relational distinct before the 8 substring-mins (r17, guide
@@ -777,14 +735,15 @@ object Dedup {
     // in the kernel — sha2 still runs once per distinct (doc, token), but
     // the former distinct's full string-keyed shuffle is gone and only 8
     // hex slices per doc cross the exchange.
-    val toks = docs.select(col(idCol).as("doc_id"),
-        org.apache.spark.sql.graft.WordNGrams.distinctColumn(col(textCol), 1)
-          .as("t"))
-      .withColumn("_d", sha2(col("t"), 256))
-    val aggs = (0 until ShaHashes).map(i =>
-      min(substring(col("_d"), 1 + 8 * i, 8)).as(s"m$i"))
-    toks.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    BandedLsh.signatures(docs.select(col(idCol).as("doc_id"),
+      org.apache.spark.sql.graft.WordNGrams.distinctColumn(col(textCol), 1).as("t")),
+      BandedLsh.Sha256)
   }
+
+  /** Signature groups (sig, rep, members) of the sha256 signatures. */
+  private[graft] def minhashShaGroups(docs: DataFrame, textCol: String,
+      idCol: String): DataFrame =
+    BandedLsh.groups(minhashShaSignatures(docs, textCol, idCol), BandedLsh.Sha256.k)
 
   /** LSH candidates + est_jaccard from the sha256 signatures; same shape as
     * minhashCandidates (band equi-join, (band, bucket, id) shuffle only),
@@ -792,41 +751,10 @@ object Dedup {
     * confirms the expansion is exact, not approximate. */
   def minhashShaCandidates(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    val sigs = minhashShaSignatures(docs, textCol, idCol)
     // persisted for the same single-materialization guarantee as
     // minhashCandidates
-    val groups = sigs
-      .groupBy(array((0 until ShaHashes).map(i => col(s"m$i")): _*).as("_sig"))
-      .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members"))
-      .trackedPersist()
-    val repSigs = groups.select(col("rep").as("doc_id") +:
-      (0 until ShaHashes).map(i => col("_sig")(i).as(s"m$i")): _*)
-    val bandCols = (0 until ShaBands).map { b =>
-      struct(lit(b).as("band"),
-        concat(col(s"m${ShaBandRows * b}"), lit("|"),
-          col(s"m${ShaBandRows * b + 1}")).as("bh"))
-    }
-    val buckets = repSigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val cand = buckets.as("x")
-      .join(buckets.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
-    val sa = repSigs.select(col("doc_id").as("id_a") +:
-      (0 until ShaHashes).map(i => col(s"m$i").as(s"a$i")): _*)
-    val sb = repSigs.select(col("doc_id").as("id_b") +:
-      (0 until ShaHashes).map(i => col(s"m$i").as(s"b$i")): _*)
-    val repPairs = cand.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("est_jaccard",
-        (0 until ShaHashes)
-          .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-          .reduce(_ + _) / lit(ShaHashes.toDouble))
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    expandInter(repPairs, groups, Seq("est_jaccard"))
-      .unionByName(intraPairs(groups)
-        .select(col("id_a"), col("id_b"), lit(1.0).as("est_jaccard")))
+    val groups = minhashShaGroups(docs, textCol, idCol).trackedPersist()
+    expandCandidates(BandedLsh.selfPairs(groups, BandedLsh.Sha256), groups)
   }
 
   // q51: sha256-MinHash-LSH near-dup candidates (est_jaccard ≥ 0.5) on the
@@ -871,24 +799,6 @@ object Dedup {
 
   // ── incremental near-dup (continuous-crawl screening) ─────────────────
 
-  /** Screen a NEW batch against an existing corpus WITHOUT re-pairing the
-    * corpus with itself: signatures for both sides, band buckets, and a
-    * batch→history band equi-join only — shuffle volume is
-    * O((batch + history) × bands) and the history×history quadrant never
-    * pairs. At scale the history side is a maintained signature/band
-    * index (written once per ingest, q82's digest-index pattern); here it
-    * is derived inline. sha256 MinHash (q51's geometry) so DuckDB replays
-    * candidates AND estimates bit-for-bit. Clone blow-up note: a real
-    * pipeline runs exact dedup (q32/q82) on the batch first, so member
-    * multiplicity is 1 by the time LSH pairing runs — the same reason
-    * trainingPrep orders its stages that way.
-    */
-  /** PRODUCTION form of the incremental screen: xxhash64 MinHash (q34's
-    * 64-perm / 16-band geometry — better estimates and ~no crypto cost vs
-    * the 8-slice sha twin, but not DuckDB-replayable). Same collapse →
-    * band equi-join → expand shape as [[incrementalNearDupSha]]; recall
-    * behavior is pinned against the sha twin in MergeScd2Spec.
-    */
   /** Signature GROUPS (sig, rep, members) for one side of the incremental
     * screen — plain rows, so a production pipeline PERSISTS the history
     * side once per ingest (parquet) and every later batch screens against
@@ -896,11 +806,14 @@ object Dedup {
     * graft.Fixtures; q181 is the band-index sibling). */
   def minhashGroups(docs: DataFrame, textCol: String, idCol: String,
       gram: Int = 1): DataFrame =
-    minhashSignatures(docs, textCol, idCol, gram)
-      .groupBy(col("sig"))
-      .agg(min(col("doc_id")).as("rep"),
-        collect_list(col("doc_id")).as("members"))
+    BandedLsh.groups(minhashSignatures(docs, textCol, idCol, gram), NumHashes)
 
+  /** PRODUCTION form of the incremental screen: xxhash64 MinHash (q34's
+    * 64-perm / 16-band geometry — better estimates and ~no crypto cost vs
+    * the 8-slice sha twin, but not DuckDB-replayable). Same collapse →
+    * band equi-join → expand shape as [[incrementalNearDupSha]]; recall
+    * behavior is pinned against the sha twin in MergeScd2Spec.
+    */
   def incrementalNearDup(history: DataFrame, batch: DataFrame,
       textCol: String, idCol: String, gram: Int = 1): DataFrame =
     incrementalNearDupIndexed(
@@ -915,60 +828,20 @@ object Dedup {
       textCol: String, idCol: String, gram: Int = 1): DataFrame = {
     val hg = histGroups.trackedPersist()
     val bg = minhashGroups(batch, textCol, idCol, gram).trackedPersist()
-    val repPairs = incrementalRepScreen(hg, bg)
-    repPairs
-      .join(bg.select(col("rep").as("new_id"), col("members").as("_ms_n")),
-        "new_id")
-      .join(hg.select(col("rep").as("hist_id"), col("members").as("_ms_h")),
-        "hist_id")
-      .select(col("est_jaccard"), explode(col("_ms_n")).as("new_id"),
-        col("_ms_h"))
-      .select(col("est_jaccard"), col("new_id"),
-        explode(col("_ms_h")).as("hist_id"))
-      .select(col("new_id"), col("hist_id"), col("est_jaccard"))
+    GroupExpand.expandCross(incrementalRepScreen(hg, bg), bg, hg)
   }
 
-  /** The PRE-EXPANSION screen of [[incrementalNearDupIndexed]]: rep-level
-    * band equi-join + distinct + signature-match estimate over two group
+  /** The PRE-EXPANSION screen of [[incrementalNearDupIndexed]] (and, with
+    * the sha256 scheme, of [[incrementalNearDupSha]]): rep-level band
+    * equi-join + distinct + signature-match estimate over two group
     * frames (sig, rep, members). Factored out so the group-collapse
     * contract is machine-checkable (DedupSpec): on a clone-adversarial
     * corpus the screen's cardinality is bounded by groups², never
     * members² — any member blow-up (q106's 136M pairs at 100×) happens
     * strictly in the expansion, which is the fixture's semantics. */
-  private[graft] def incrementalRepScreen(hg: DataFrame,
-      bg: DataFrame): DataFrame = {
-    def repSigs(groups: DataFrame): DataFrame =
-      groups.select(col("rep").as("doc_id") +: col("sig") +:
-        (0 until NumHashes).map(i => col("sig")(i).as(s"m$i")): _*)
-    def buckets(sigs: DataFrame): DataFrame = {
-      val bandCols = (0 until NumBands).map { bi =>
-        struct(lit(bi).as("band"),
-          xxhash64(((0 until BandRows).map(j =>
-            col(s"m${bi * BandRows + j}")) :+ lit(bi)): _*).as("bh"))
-      }
-      sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    }
-    val cand = buckets(repSigs(bg)).as("x")
-      .join(buckets(repSigs(hg)).as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("hist_id"))
-      .distinct()
-    // est as a flat 64-term comparison sum over the joined signature
-    // components — same value as the earlier aggregate(zip_with(...))
-    // HOF form, but whole-stage-codegen-able (HOFs evaluate interpreted
-    // and allocate a 64-element array per pair; see repPairsFromGroups).
-    val sa = repSigs(bg).select(col("doc_id").as("new_id") +:
-      (0 until NumHashes).map(i => col(s"m$i").as(s"xa$i")): _*)
-    val sb = repSigs(hg).select(col("doc_id").as("hist_id") +:
-      (0 until NumHashes).map(i => col(s"m$i").as(s"xb$i")): _*)
-    val matches = (0 until NumHashes)
-      .map(i => when(col(s"xa$i") === col(s"xb$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    cand.join(sa, "new_id").join(sb, "hist_id")
-      .withColumn("est_jaccard", matches / lit(NumHashes.toDouble))
-      .select(col("new_id"), col("hist_id"), col("est_jaccard"))
-  }
+  private[graft] def incrementalRepScreen(hg: DataFrame, bg: DataFrame,
+      scheme: SignatureScheme = minhashScheme(BandRows)): DataFrame =
+    BandedLsh.crossPairs(bg, hg, scheme)
 
   /** Rep-level cross candidates: identical signatures collapse to a
     * min-id rep PER SIDE before any pairing (the GroupExpand discipline),
@@ -978,61 +851,27 @@ object Dedup {
     * (repPairs(new_id, hist_id, est_jaccard), histGroups, batchGroups). */
   private def crossRepCandidates(history: DataFrame, batch: DataFrame,
       textCol: String, idCol: String): (DataFrame, DataFrame, DataFrame) = {
-    def groupsOf(docs: DataFrame): DataFrame =
-      minhashShaSignatures(docs, textCol, idCol)
-        .groupBy(array((0 until ShaHashes).map(i => col(s"m$i")): _*).as("_sig"))
-        .agg(min(col("doc_id")).as("rep"),
-          collect_list(col("doc_id")).as("members"))
-        .trackedPersist()
-    val hg = groupsOf(history)
-    val bg = groupsOf(batch)
-    // the group KEY is the signature, so reps need no join back: m_i = _sig[i]
-    def repSigs(groups: DataFrame): DataFrame =
-      groups.select(col("rep").as("doc_id") +:
-        (0 until ShaHashes).map(i => col("_sig")(i).as(s"m$i")): _*)
-    def buckets(sigs: DataFrame): DataFrame = {
-      val bandCols = (0 until ShaBands).map { b =>
-        struct(lit(b).as("band"),
-          concat(col(s"m${ShaBandRows * b}"), lit("|"),
-            col(s"m${ShaBandRows * b + 1}")).as("bh"))
-      }
-      sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    }
-    val cand = buckets(repSigs(bg)).as("x")
-      .join(buckets(repSigs(hg)).as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
-      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("hist_id"))
-      .distinct()
-    val sa = repSigs(bg).select(col("doc_id").as("new_id") +:
-      (0 until ShaHashes).map(i => col(s"m$i").as(s"a$i")): _*)
-    val sb = repSigs(hg).select(col("doc_id").as("hist_id") +:
-      (0 until ShaHashes).map(i => col(s"m$i").as(s"b$i")): _*)
-    val repPairs = cand.join(sa, "new_id").join(sb, "hist_id")
-      .withColumn("est_jaccard",
-        (0 until ShaHashes)
-          .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-          .reduce(_ + _) / lit(ShaHashes.toDouble))
-      .select(col("new_id"), col("hist_id"), col("est_jaccard"))
-    (repPairs, hg, bg)
+    val hg = minhashShaGroups(history, textCol, idCol).trackedPersist()
+    val bg = minhashShaGroups(batch, textCol, idCol).trackedPersist()
+    (incrementalRepScreen(hg, bg, BandedLsh.Sha256), hg, bg)
   }
 
+  /** Screen a NEW batch against an existing corpus WITHOUT re-pairing the
+    * corpus with itself: signatures for both sides, band buckets, and a
+    * batch→history band equi-join only — shuffle volume is
+    * O((batch + history) × bands) and the history×history quadrant never
+    * pairs. At scale the history side is a maintained signature/band
+    * index (written once per ingest, q82's digest-index pattern); here it
+    * is derived inline. sha256 MinHash (q51's geometry) so DuckDB replays
+    * candidates AND estimates bit-for-bit. Clone blow-up note: a real
+    * pipeline runs exact dedup (q32/q82) on the batch first, so member
+    * multiplicity is 1 by the time LSH pairing runs — the same reason
+    * trainingPrep orders its stages that way.
+    */
   def incrementalNearDupSha(history: DataFrame, batch: DataFrame,
       textCol: String, idCol: String): DataFrame = {
     val (repPairs, hg, bg) = crossRepCandidates(history, batch, textCol, idCol)
-    // cross-side expansion: each side's groups are disjoint, so every
-    // member pair appears exactly once; the estimate copies verbatim
-    // (members are signature-identical to their rep by construction)
-    repPairs
-      .join(bg.select(col("rep").as("new_id"), col("members").as("_ms_n")),
-        "new_id")
-      .join(hg.select(col("rep").as("hist_id"), col("members").as("_ms_h")),
-        "hist_id")
-      .select(col("est_jaccard"), explode(col("_ms_n")).as("new_id"),
-        col("_ms_h"))
-      .select(col("est_jaccard"), col("new_id"),
-        explode(col("_ms_h")).as("hist_id"))
-      .select(col("new_id"), col("hist_id"), col("est_jaccard"))
+    GroupExpand.expandCross(repPairs, bg, hg)
   }
 
   /** Per-batch-doc leakage summary: for every batch doc with a near-dup
@@ -1217,13 +1056,18 @@ object Dedup {
   /** 64-bit SimHash per doc: sign of per-bit ±1 sums over token hashes,
     * one hash-agg pass with 64 sum aggregates.
     */
-  def simhash(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
+  def simhash(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+    simhashBy(docs, textCol, idCol, t => xxhash64(t),
+      (h, j) => shiftright(h, j).bitwiseAND(lit(1L)))
+
+  /** The SimHash body: `bit(h, j)` is bit j (0/1) of the staged per-token
+    * hash `h = tokenHash(t)`; every occurrence votes ±1 per bit. */
+  private def simhashBy(docs: DataFrame, textCol: String, idCol: String,
+      tokenHash: Column => Column, bit: (Column, Int) => Column): DataFrame = {
     val tok = docs
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("t"))
-      .withColumn("h", xxhash64(col("t")))
-    val bitAggs = (0 until 64).map { j =>
-      sum(shiftright(col("h"), j).bitwiseAND(lit(1L)) * 2 - 1).as(s"b$j")
-    }
+      .withColumn("h", tokenHash(col("t")))
+    val bitAggs = (0 until 64).map(j => sum(bit(col("h"), j) * 2 - 1).as(s"b$j"))
     val sums = tok.groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
     val hash = (0 until 64)
       .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
@@ -1269,22 +1113,12 @@ object Dedup {
     * per-doc 64-bit hash is reproducible in DuckDB. Tokens are NOT
     * deduped, matching `simhash` (occurrence-weighted bit sums). */
   def simhashSha(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val tok = docs
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("t"))
-      .withColumn("h", sha2(col("t"), 256))
-    def hexVal(pos: Int): Column = {
-      val a = ascii(substring(col("h"), pos, 1))
+    def hexVal(h: Column, pos: Int): Column = {
+      val a = ascii(substring(h, pos, 1))
       when(a <= 57, a - 48).otherwise(a - 87)
     }
-    val bitAggs = (0 until 64).map { j =>
-      val bit = shiftright(hexVal(j / 4 + 1), 3 - j % 4).bitwiseAND(lit(1))
-      sum(bit * 2 - 1).as(s"b$j")
-    }
-    val sums = tok.groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
-    val hash = (0 until 64)
-      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    sums.select(col("doc_id"), hash.as("simhash"))
+    simhashBy(docs, textCol, idCol, sha2(_, 256),
+      (h, j) => shiftright(hexVal(h, j / 4 + 1), 3 - j % 4).bitwiseAND(lit(1)))
   }
 
   // q56: sha256-SimHash per doc — the crypto-hash twin (kept: its hex

@@ -64,18 +64,10 @@ object DedupAudit {
       .select(col("id_a"), col("id_b"),
         (col("shared") / (col("n_a") + col("n_b") - col("shared")))
           .as("jaccard"))
-    // digest staged ONCE per shingle row (the minhashShaSignatures
-    // discipline — 8 inline sha2 calls per row otherwise)
-    val dig = toks.withColumn("_d", sha2(col("t"), 256))
-    val slices = (0 until 8).map(i =>
-      min(substring(col("_d"), i * 8 + 1, 8)).as(s"m$i"))
-    val sigs = dig.groupBy(col("doc_id")).agg(slices.head, slices.tail: _*)
-    val buckets = bucketsFromSigs(sigs)
-    val cand = buckets.as("x")
-      .join(buckets.as("y"), col("x.band") === col("y.band") &&
-        col("x.bh") === col("y.bh") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
+    // minhashShaSignatures' aggregate over the shared shingle relation
+    val buckets = BandedLsh.buckets(
+      BandedLsh.signatures(toks, BandedLsh.Sha256), BandedLsh.Sha256)
+    val cand = BandedLsh.bandJoin(buckets, buckets, "id_a", "id_b", ordered = true)
     val ann = truth
       .join(cand.withColumn("is_cand", lit(1L)), Seq("id_a", "id_b"),
         "full_outer")
@@ -157,20 +149,12 @@ object DedupAudit {
       |    AS pred_catch
       |FROM agg ORDER BY tau""".stripMargin
 
-  /** The ONE 4×2 band-geometry builder: (doc_id, band, bh) bucket rows
-    * from an (m0..m7) signature frame — q179's candidate leg and q181's
-    * index rows must stay the same geometry by construction. */
-  private def bucketsFromSigs(sigs: DataFrame): DataFrame = {
-    val bandCols = (0 until 4).map(b => struct(lit(b).as("band"),
-      concat(col(s"m${2 * b}"), lit("|"), col(s"m${2 * b + 1}")).as("bh")))
-    sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-  }
-
   /** (doc_id, band, bh) band-bucket rows of the q51 sha geometry — the
-    * physical content of an LSH INDEX over `docs`. */
+    * physical content of an LSH INDEX over `docs`. q179's candidate leg
+    * uses the same builder, so the two stay one geometry by construction. */
   private def bandRows(docs: DataFrame): DataFrame =
-    bucketsFromSigs(Dedup.minhashShaSignatures(docs, "text", "doc_id"))
+    BandedLsh.buckets(Dedup.minhashShaSignatures(docs, "text", "doc_id"),
+      BandedLsh.Sha256)
 
   // ── q181: LSH band-index MAINTENANCE — the index q106's incremental
   //        screen presupposes, maintained instead of rebuilt: history

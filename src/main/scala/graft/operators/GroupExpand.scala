@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Shared machinery for the collapse-then-expand pattern used by every
   * clone-robust pairing operator (Dedup.jaccardPairs, minhashCandidates,
-  * minhashShaCandidates, Similarity.srpCandidatePairs): identical
+  * minhashShaCandidates, incrementalNearDupIndexed, incrementalNearDupSha,
+  * winnowingShaPairs, Similarity.srpCandidatePairs): identical
   * texts/signatures collapse to a min-id representative with a `members`
   * list before the expensive pairing join, and these helpers re-expand the
   * representative-level result to the full member-pair set afterwards.
@@ -30,6 +31,21 @@ private[operators] object GroupExpand {
       .select(least(col("a"), col("b")).as("id_a") +:
         greatest(col("a"), col("b")).as("id_b") +: pay: _*)
   }
+
+  /** Re-expand batch×history rep pairs (new_id, hist_id, est_jaccard) to
+    * every member pair. Each side's groups are disjoint, so every member
+    * pair appears exactly once; the estimate copies verbatim (members are
+    * signature-identical to their rep by construction). */
+  def expandCross(repPairs: DataFrame, batchGroups: DataFrame,
+      histGroups: DataFrame): DataFrame =
+    repPairs
+      .join(batchGroups.select(col("rep").as("new_id"), col("members").as("_ms_n")),
+        "new_id")
+      .join(histGroups.select(col("rep").as("hist_id"), col("members").as("_ms_h")),
+        "hist_id")
+      .select(col("est_jaccard"), explode(col("_ms_n")).as("new_id"), col("_ms_h"))
+      .select(col("est_jaccard"), col("new_id"), explode(col("_ms_h")).as("hist_id"))
+      .select(col("new_id"), col("hist_id"), col("est_jaccard"))
 
   /** ALL (a < b) member pairs within each multi-member group, with the
     * group's rep retained for payload joins. */

@@ -120,16 +120,6 @@ object Similarity {
       |SELECT qid, nn_id, cos_sim, rn FROM ranked WHERE rn <= 3
       |ORDER BY qid, rn""".stripMargin
 
-  /** Sign-random-projection LSH banding — the cosine analog of MinHash
-    * bands and the asymptotic fix for fixed-cardinality blocking (the q36
-    * bottleneck measured at 50× in PLANS.md): sign bits from seeded
-    * hyperplanes, banded r bits × b bands; vectors sharing any band become
-    * candidates (P ≈ 1-(1-p^r)^b where p = 1 - θ/π), then exact cosine
-    * verifies. Shuffle volume is O(n·bands); candidate count tracks true
-    * similarity structure instead of block cardinality. Geometry is
-    * corpus-size-adaptive (srpParams) and identical signatures collapse
-    * before the band join.
-    */
   /** Band geometry must scale WITH the corpus (50× rehearsal lesson: fixed
     * 8-bit bands = 256 buckets/band → ~n²/256 candidate rows per band at
     * 100k vectors → 644s; the bucket count has to grow with n or pruning
@@ -165,6 +155,16 @@ object Similarity {
     srpCandidatePairs(e, bands, rows)
   }
 
+  /** Sign-random-projection LSH banding — the cosine analog of MinHash
+    * bands and the asymptotic fix for fixed-cardinality blocking (the q36
+    * bottleneck measured at 50× in PLANS.md): sign bits from seeded
+    * hyperplanes, banded r bits × b bands; vectors sharing any band become
+    * candidates (P ≈ 1-(1-p^r)^b where p = 1 - θ/π), then exact cosine
+    * verifies. Shuffle volume is O(n·bands); candidate count tracks true
+    * similarity structure instead of block cardinality. Geometry is
+    * corpus-size-adaptive (srpParams) and identical signatures collapse
+    * before the band join.
+    */
   def srpCandidatePairs(e: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     // all band signatures in one fused codegen pass over the vector
     val sig = org.apache.spark.sql.graft.SrpSignatureExpr.column(
@@ -191,17 +191,13 @@ object Similarity {
     // cosines downstream (identical sign pattern does NOT imply the exact
     // cosine clears a caller's threshold, so no pair may be skipped)
     val intra = GroupExpand.intraPairs(groups).select(col("id_a"), col("id_b"))
-    // bucket join and distinct move ONLY (band, sig, rep) — never the
+    // bucket join and distinct move ONLY (band, bh, rep) — never the
     // vectors: dragging two 64-double arrays through the shuffle+distinct
     // was 8× the query's cost. Vectors re-attach afterwards via two joins
     // against the (small, broadcastable) embedding table.
-    val banded = groups.select(col("rep"), posexplode(col("_sig")).as(Seq("band", "sig")))
-    val interReps = banded.as("x")
-      .join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.rep") < col("y.rep"))
-      .select(col("x.rep").as("id_a"), col("y.rep").as("id_b"))
-      .distinct()
+    val banded = groups.select(col("rep").as("doc_id"),
+      posexplode(col("_sig")).as(Seq("band", "bh")))
+    val interReps = BandedLsh.bandJoin(banded, banded, "id_a", "id_b", ordered = true)
     // re-expand rep pairs to every member combination (groups are
     // disjoint, so no pair is emitted twice)
     val inter = GroupExpand.expandInter(interReps, groups, Seq.empty)
@@ -958,13 +954,9 @@ object Similarity {
         when(dots(b * TwinRowsPerBand + r) >= 0, lit(1L << r)).otherwise(lit(0L))
       }.reduce(_ + _)
     }
-    val rows = ed.select(col("vec_id"),
-      posexplode(array(bandVals: _*)).as(Seq("band", "val")))
-    rows.as("x").join(rows.as("y"),
-        col("x.band") === col("y.band") && col("x.val") === col("y.val") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-      .distinct()
+    val rows = ed.select(col("vec_id").as("doc_id"),
+      posexplode(array(bandVals: _*)).as(Seq("band", "bh")))
+    BandedLsh.bandJoin(rows, rows, "id_a", "id_b", ordered = true)
   }
 
   def q61(s: SparkSession, dir: String): DataFrame = {

@@ -75,6 +75,8 @@ object Pipeline {
     // V6 (non-empty) + V2 (critical nulls) from the overall row
     val v = rows.get(overall).fold(Validation.emptyInput)(all =>
       Validation.nullsVerdict(critical.map(c => c -> all.head.getAs[Long](s"_null_$c"))))
+    // a failed gate returns no Outputs, so nothing else could release the cache
+    if (!v.passed) flights.unpersist()
     require(v.passed, s"validation failed: ${v.errors.mkString("; ")}")
 
     // one grain's rows as a local relation: keys typed as in `flights`,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -409,28 +410,43 @@ class DedupSpec extends SparkTestBase {
     // quadratic (q106's 136M pairs at 100× are EXPANSION semantics; the
     // screen must never see them). This pins the r12 rehearsal note as a
     // machine check: reintroducing member-level pairing fails the bound.
-    val texts = (0 until 6).map(i =>
-      s"unique token stream number $i with shared filler words alpha beta")
-    def side(base: Long) = (0 until 30)
-      .map(i => (base + i, texts(i % 6))).toDF("doc_id", "text")
-    val hist = side(0L)
-    val batch = side(1000L)
-    val hg = Dedup.minhashGroups(hist, "text", "doc_id")
-    val bg = Dedup.minhashGroups(batch, "text", "doc_id")
-    assert(hg.count() == 6 && bg.count() == 6, "6 signature groups per side")
-    val screen = Dedup.incrementalRepScreen(hg, bg).collect()
-    assert(screen.length <= 6 * 6,
-      s"screen must be rep-level (<=36 pairs), got ${screen.length}")
-    // every same-text cross pair is a screen hit (identical sigs collide
-    // in every band), so the 6 diagonal pairs are present with est=1.0
-    val diag = screen.filter(r => r.getDouble(2) == 1.0)
-    assert(diag.length >= 6, s"identical-text groups must screen: ${screen.toSeq}")
-    // the member blow-up happens strictly in the expansion: each screened
-    // group pair expands to exactly 5×5 member pairs
-    val expanded = Dedup.incrementalNearDup(hist, batch, "text", "doc_id")
-      .count()
-    assert(expanded == screen.length.toLong * 25L,
-      s"expansion must be screen×k² = ${screen.length * 25}, got $expanded")
+    // One input per signature scheme. The sha256 texts carry four private
+    // tokens each: with 8 components, the xxhash64 texts' single private
+    // token leaves some sha256 signatures identical (4 groups, not 6).
+    val inputs = Seq(
+      ("xxhash64",
+        (i: Int) => s"unique token stream number $i with shared filler words alpha beta",
+        (d: DataFrame) => Dedup.minhashGroups(d, "text", "doc_id"),
+        (hg: DataFrame, bg: DataFrame) => Dedup.incrementalRepScreen(hg, bg),
+        (h: DataFrame, b: DataFrame) => Dedup.incrementalNearDup(h, b, "text", "doc_id")),
+      ("sha256",
+        (i: Int) => s"sha twin document $i carries tokens k${i}a k${i}b k${i}c k${i}d",
+        (d: DataFrame) => Dedup.minhashShaGroups(d, "text", "doc_id"),
+        (hg: DataFrame, bg: DataFrame) =>
+          Dedup.incrementalRepScreen(hg, bg, graft.operators.BandedLsh.Sha256),
+        (h: DataFrame, b: DataFrame) => Dedup.incrementalNearDupSha(h, b, "text", "doc_id")))
+    for ((scheme, text, groupsOf, screenOf, pairsOf) <- inputs) {
+      val texts = (0 until 6).map(text)
+      def side(base: Long) = (0 until 30)
+        .map(i => (base + i, texts(i % 6))).toDF("doc_id", "text")
+      val hist = side(0L)
+      val batch = side(1000L)
+      val hg = groupsOf(hist)
+      val bg = groupsOf(batch)
+      assert(hg.count() == 6 && bg.count() == 6, s"$scheme: 6 signature groups per side")
+      val screen = screenOf(hg, bg).collect()
+      assert(screen.length <= 6 * 6,
+        s"$scheme: screen must be rep-level (<=36 pairs), got ${screen.length}")
+      // every same-text cross pair is a screen hit (identical sigs collide
+      // in every band), so the 6 diagonal pairs are present with est=1.0
+      val diag = screen.filter(r => r.getDouble(2) == 1.0)
+      assert(diag.length >= 6, s"$scheme: identical-text groups must screen: ${screen.toSeq}")
+      // the member blow-up happens strictly in the expansion: each screened
+      // group pair expands to exactly 5×5 member pairs
+      val expanded = pairsOf(hist, batch).count()
+      assert(expanded == screen.length.toLong * 25L,
+        s"$scheme: expansion must be screen×k² = ${screen.length * 25}, got $expanded")
+    }
   }
 
   test("audit-only exact legs fail fast above their caps with a pointer " +

@@ -118,11 +118,15 @@ class PipelineJobsSpec extends SparkTestBase {
       Pipeline.run(spark, raw.limit(0))
     }
     assert(empty.getMessage.endsWith("validation failed: empty input"), empty.getMessage)
+    val nullRaw = raw.withColumn("OP_CARRIER",
+      org.apache.spark.sql.functions.expr("nullif(OP_CARRIER, 'UA')"))
     val nulls = intercept[IllegalArgumentException] {
-      Pipeline.run(spark, raw.withColumn("OP_CARRIER",
-        org.apache.spark.sql.functions.expr("nullif(OP_CARRIER, 'UA')")))
+      Pipeline.run(spark, nullRaw)
     }
     assert(nulls.getMessage.endsWith(
       "validation failed: nulls in critical columns: airline (2 nulls)"), nulls.getMessage)
+    // the rejected load's cached `flights` is released before the throw
+    assert(graft.ops.Cleaning.ingestAndProcess(nullRaw).storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
   }
 }
