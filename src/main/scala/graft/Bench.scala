@@ -1,42 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 object Bench {
   /** Force FULL materialization of every output column. A bare `.count()`
     * lets column pruning skip expensive projections entirely (measured:
     * winnowing queries benched "free" while actually costing seconds), so
     * each row is hashed across all columns and the hashes aggregated. */
-  private def drain(df: org.apache.spark.sql.DataFrame): Unit = {
+  private[graft] def hashed(df: DataFrame): DataFrame =
     df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).as("_h"))
-      .agg(count(lit(1)), bit_xor(col("_h"))).collect()
-    ()
-  }
-  /** Cores of the `local[n]` master and its shuffle width. */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+      .agg(count(lit(1)), bit_xor(col("_h")))
+  /** Drains `df` through `hashed`; returns its row count. */
+  private[graft] def drain(df: DataFrame): Long = hashed(df).collect()(0).getLong(0)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Generated-class REUSE across queries (the r8 driver-env fix): the
-      // codegen cache returns the same compiled+JITted Class for an
-      // identical generated source, but (a) the default 100-entry cache
-      // evicts across 182 queries and (b) the per-plan codegenStageId in
-      // the class NAME defeats equality for structurally identical stages
-      // at different plan positions. A large cache + uniform class names
-      // turn repeat shapes (documents scan→tokenize→agg etc.) into cache
-      // hits that carry their JIT state — the timed run executes code C2
-      // compiled earlier in the session instead of fresh interpreted
-      // bytecode. This is the mechanism behind the driver-env 3-11×
-      // task-CPU inflation on identical plans (BENCH_FULL r8: 340s of JIT
-      // compile across the session; MetricsTap r5 forensics: late-session
-      // queries run partially interpreted, not contended).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Untimed warmup: JIT, whole-stage-codegen compiler, parquet reader and
     // shuffle paths — so the first timed query doesn't absorb session cost.
     spark.range(1000000).selectExpr("sum(id)", "count(distinct id % 7)").collect()
@@ -56,10 +33,7 @@ object Bench {
     // write (r10: that cost 10 queries ~68s and made the inflated set
     // churn; media/ANN fixture builds were the whole tail). The wall cost
     // is one untimed extra pass; reproducibility is the point.
-    // SPARK_GRAFT_WARM_DIR overrides for A/B forensics.
-    val warmDir: Option[String] =
-      if (sys.env.get("SPARK_GRAFT_WARM").contains("0")) None
-      else Some(sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir))
+    val warm = !sys.env.get("SPARK_GRAFT_WARM").contains("0")
     // A failed query must never flatter the bench as a ~0s win: record the
     // error per-query, surface it on stderr, and emit it in the JSON line.
     // Optional comma-separated subset for standalone measurement
@@ -85,19 +59,7 @@ object Bench {
     spark.sparkContext.addSparkListener(tap)
     def busDrain(): Unit =
       org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
-    // Optional run-order override for inflation bisection:
-    // SPARK_GRAFT_ORDER=reverse runs the lexicographic list backwards.
-    val ordered0 = selected.toSeq.sortBy(_._1)
-    val ordered = sys.env.get("SPARK_GRAFT_ORDER") match {
-      case Some("reverse") => ordered0.reverse
-      case _ => ordered0
-    }
-    // Experiment knob for the late-session CPU-inflation mechanism
-    // (PLANS.md round-6 JIT forensics): SPARK_GRAFT_GC_EVERY=N forces a
-    // full GC every N queries OUTSIDE the timers, unloading dead codegen
-    // classloaders. If inflation is class-accumulation-driven this flattens
-    // the tail; if it is megamorphic-call-site-driven it won't.
-    val gcEvery = sys.env.get("SPARK_GRAFT_GC_EVERY").map(_.toInt)
+    val ordered = selected.toSeq.sortBy(_._1)
     // Best-of-N timed passes (default 2; SPARK_GRAFT_PASSES overrides):
     // the r11 grading record lost 71s to transient host contention on a
     // binary that reproduced at 0.91-0.97x its reference when idle — a
@@ -119,12 +81,12 @@ object Bench {
     // class names) carries compiled classes across the cycle boundary.
     type Pass = (String, Double, Double, Option[String], MetricsTap.Snap,
       Double, String)
-    val warmWall: Double = warmDir.fold(0.0) { wd =>
+    val warmWall: Double = if (!warm) 0.0 else {
       val w0 = System.nanoTime()
       ordered.foreach { case (_, fn) =>
-        // warm pass (untimed): failures are ignored — a query broken only
-        // at the warm SF must not fail the bench; its timed run decides.
-        try drain(fn(spark, wd)) catch { case _: Throwable => () }
+        // warm pass (untimed): failures are ignored — the timed run
+        // records them.
+        try drain(fn(spark, sfDir)) catch { case _: Throwable => () }
         finally OperatorCaches.release()
       }
       (System.nanoTime() - w0) / 1e9
@@ -132,10 +94,7 @@ object Bench {
     val cycles: Seq[(Double, IndexedSeq[Pass])] =
       (1 to timedPasses).map { _ =>
         val c0 = System.nanoTime()
-        var qIdx = 0
         val rs = ordered.map { case (name, fn) =>
-          qIdx += 1
-          if (gcEvery.exists(n => n > 0 && qIdx % n == 0)) System.gc()
           busDrain()
           val snap0 = tap.snapshot()
           val pcpu0 = MetricsTap.processCpuSec()
@@ -270,7 +229,7 @@ object Bench {
       rs.map { case (k, v, _, _, _, _, _) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
     }.mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","timed_passes":$timedPasses,"warm_wall_sec":${f"$warmWall%.3f"},"inflated_basis":"$inflatedBasis","cycle_walls":$cycleWallsJson,"cycle_queries":$cycleQueriesJson,"queries":$fullQs,"gc_sec":$fullGcs,"errors":$fullErrs,"metrics":$fullMetrics,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","timed_passes":$timedPasses,"warm_wall_sec":${f"$warmWall%.3f"},"inflated_basis":"$inflatedBasis","cycle_walls":$cycleWallsJson,"cycle_queries":$cycleQueriesJson,"queries":$fullQs,"gc_sec":$fullGcs,"errors":$fullErrs,"metrics":$fullMetrics,"sf":"$sfDir","cpus":${Session.cpus}}"""
     // Only a FULL run may replace the full-session record: a standalone
     // SPARK_GRAFT_QUERIES subset re-measure must not clobber the 91-query
     // artifact with a 1-query file (that exact loss happened once).

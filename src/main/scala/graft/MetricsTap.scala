@@ -4,13 +4,13 @@ import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Bench-only task-metrics tap. Accumulates executor-side counters so each
-  * bench entry can attribute its wall-clock to CPU vs shuffle vs spill vs
-  * scheduling gap — rounds 2–5 of the driver record carried 2–20×
-  * wall-clock inflation on a handful of queries that standalone re-runs
-  * could not reproduce, and without these counters the artifact could not
-  * name the mechanism. Snapshot before/after a query (with a listener-bus
-  * drain) and subtract.
+/** Task-metrics tap of Bench and Probe. Accumulates executor-side
+  * counters so each bench entry can attribute its wall-clock to CPU vs
+  * shuffle vs spill vs scheduling gap — rounds 2–5 of the driver record
+  * carried 2–20× wall-clock inflation on a handful of queries that
+  * standalone re-runs could not reproduce, and without these counters the
+  * artifact could not name the mechanism. Snapshot before/after a query
+  * (with a listener-bus drain) and subtract.
   */
 final class MetricsTap extends SparkListener {
   private val taskTimeMs = new LongAdder // executorRunTime (ms, summed over tasks)

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: dumps the formatted physical plan of every registered
   * query (`runMain graft.Plans <sfDir> <outFile>`) so plan quality —
@@ -13,13 +12,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       sb.append(s"\n━━━━━ $name ━━━━━\n")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal: replicate the sf0.1 fixtures ~10× (≈ sf1: 6M lineitem
@@ -28,13 +28,7 @@ object ScaleRehearsal {
     val replicas = if (args.length > 0) args(0).toInt else 10
     val work = if (args.length > 1) args(1) else "/tmp/graft_sfx"
     val src = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val K = 100000000L // key shift per replica
     val done = new java.io.File(s"$work/_DONE")
@@ -188,12 +182,7 @@ object ScaleRehearsal {
     }
     val times = selected.map { name =>
       val t0 = System.nanoTime()
-      // same drain as Bench: hash every output column — count() lets
-      // column pruning skip expensive projections and under-measures
-      val df = SparkEntry.queries(name)(spark, work)
-      val n = df.select(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*))
-          .as("_h"))
-        .agg(count(lit(1)), bit_xor(col("_h"))).collect()(0).getLong(0)
+      val n = Bench.drain(SparkEntry.queries(name)(spark, work))
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"$name%-24s $dt%7.2f s   ($n rows)")
       // same per-query cache release discipline as Bench

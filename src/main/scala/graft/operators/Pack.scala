@@ -114,7 +114,7 @@ object Pack {
     * instead. */
   /** Pack `prepped` docs into sequences and write size-targeted shards;
     * returns (n_seqs, n_files). */
-  /** Label the jobs of `body` in the Spark UI / JobTrace (guide §1.5).
+  /** Label the jobs of `body` in the Spark UI / graft.Probe (guide §1.5).
     * Thread-local, so concurrent per-split builds label independently. */
   private def labeled[T](s: SparkSession, desc: String)(body: => T): T = {
     s.sparkContext.setJobDescription(desc)

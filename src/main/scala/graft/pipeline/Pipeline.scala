@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import graft.ops.{Cleaning, Validation}
 
 /** End-to-end batch pipeline — the reference's 6-task Airflow DAG
@@ -30,15 +30,27 @@ object Pipeline {
       routeAnalysis: DataFrame,
       apiMetrics: DataFrame)
 
+  private def pct(part: Column, total: Column): Column =
+    when(total =!= 0, round(part / total * 100 * 100) / 100.0)
+
   /** The measures of every grain — the reference's CTE query
     * (dags/flight_data_pipeline.py:136-158): totals, avg delays rounded,
-    * delayed/on-time conditional counts. */
-  private val measures = Seq(
-    count(lit(1)).as("total_flights"),
-    (round(avg(col("departure_delay")) * 100) / 100.0).as("avg_departure_delay"),
-    (round(avg(col("arrival_delay")) * 100) / 100.0).as("avg_arrival_delay"),
-    count(when(col("flight_status") === "Delayed", 1)).as("delayed_flights"),
-    count(when(col("flight_status") === "On Time", 1)).as("ontime_flights"))
+    * delayed/on-time conditional counts, the on-time share and the X15
+    * threshold label. `flight_status` is never null, so the on-time count
+    * is also the routes query's `total - delayed`. */
+  private val measures = {
+    val total = count(lit(1))
+    val ontime = count(when(col("flight_status") === "On Time", 1))
+    val share = pct(ontime, total)
+    Seq(
+      total.as("total_flights"),
+      (round(avg(col("departure_delay")) * 100) / 100.0).as("avg_departure_delay"),
+      (round(avg(col("arrival_delay")) * 100) / 100.0).as("avg_arrival_delay"),
+      count(when(col("flight_status") === "Delayed", 1)).as("delayed_flights"),
+      ontime.as("ontime_flights"),
+      share.as("ontime_percentage"),
+      when(share > 80, "Good").otherwise("Needs Improvement").as("status"))
+  }
 
   /** V2 columns of the processed-data gate (process.py:78-123). */
   private val critical = Seq("flight_date", "airline", "origin", "destination")
@@ -46,9 +58,6 @@ object Pipeline {
   private val keys = Seq("airline", "origin", "destination")
   // grouping_id over `keys`: one bit per key left out, first key highest
   private val (perAirline, perRoute, overall) = (3L, 4L, 7L)
-
-  private def pct(part: Column, total: Column): Column =
-    when(total =!= 0, round(part / total * 100 * 100) / 100.0)
 
   /** Run the full DAG on a raw (87-column-style) flight frame. One
     * aggregate computes the per-airline, per-route and overall rows plus
@@ -79,31 +88,23 @@ object Pipeline {
     if (!v.passed) flights.unpersist()
     require(v.passed, s"validation failed: ${v.errors.mkString("; ")}")
 
-    // one grain's rows as a local relation: keys typed as in `flights`,
-    // measures as aggregated (or all nullable)
-    def local(gid: Long, key: Seq[String], measure: Seq[String],
-        nullable: Boolean = false): DataFrame = {
-      val fields = key.map(flights.schema(_)) ++ measure.map(grains.schema(_))
-        .map(f => if (nullable) f.copy(nullable = true) else f)
-      spark.createDataFrame(rows(gid).toSeq.map(r =>
-        Row.fromSeq(fields.map(f => r.get(r.fieldIndex(f.name))))).asJava, StructType(fields))
-    }
-    val perf = local(perAirline, Seq("airline"), Seq("total_flights",
-        "avg_departure_delay", "avg_arrival_delay", "delayed_flights", "ontime_flights"))
-      .withColumn("ontime_percentage", pct(col("ontime_flights"), col("total_flights")))
-    val routes = local(perRoute, Seq("origin", "destination"),
-        Seq("total_flights", "avg_departure_delay", "delayed_flights"))
-      .withColumn("ontime_percentage",
-        pct(col("total_flights") - col("delayed_flights"), col("total_flights")))
+    // one grain's rows as a local relation of aggregate columns, renamed
+    // to `as` where given
+    def local(gid: Long, cols: Seq[String], as: Seq[StructField] = Nil): DataFrame =
+      spark.createDataFrame(rows(gid).toSeq.map(r => Row.fromSeq(cols.map(r.getAs[Any](_)))).asJava,
+        StructType(if (as.isEmpty) cols.map(grains.schema(_)) else as))
+    val perf = local(perAirline, Seq("airline", "total_flights", "avg_departure_delay",
+      "avg_arrival_delay", "delayed_flights", "ontime_flights", "ontime_percentage"))
+    val routes = local(perRoute, Seq("origin", "destination", "total_flights",
+      "avg_departure_delay", "delayed_flights", "ontime_percentage"))
     // the overall row as the reference's second-level sum (A5): nullable
     // counts, + the X15 threshold label
-    val api = local(overall, Nil, Seq("total_flights", "delayed_flights", "ontime_flights"),
-        nullable = true).toDF("total_flights", "total_delayed_flights", "total_ontime_flights")
-      .withColumn("overall_ontime_percentage",
-        pct(col("total_ontime_flights"), col("total_flights")))
-      .withColumn("status",
-        when(col("overall_ontime_percentage") > 80, "Good")
-          .otherwise("Needs Improvement"))
+    val api = local(overall, Seq("total_flights", "delayed_flights", "ontime_flights",
+      "ontime_percentage", "status"), Seq(
+      StructField("total_flights", LongType), StructField("total_delayed_flights", LongType),
+      StructField("total_ontime_flights", LongType),
+      StructField("overall_ontime_percentage", DoubleType),
+      StructField("status", StringType, nullable = false)))
     Outputs(flights, perf, routes, api)
   }
 }

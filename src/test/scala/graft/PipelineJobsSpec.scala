@@ -6,6 +6,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types._
 
 import graft.model.Schemas
@@ -60,6 +61,9 @@ class PipelineJobsSpec extends SparkTestBase {
       info(s"$jobs Spark jobs for one load")
       assert(jobs <= 6, s"$jobs Spark jobs for one load")
       val (perf, routes, api) = got
+      // bare local relations: no projection left for each action to optimize
+      Seq(out.performanceMetrics, out.routeAnalysis, out.apiMetrics).foreach(df =>
+        assert(df.queryExecution.logical.isInstanceOf[LocalRelation], df.queryExecution.logical))
 
       assert(shape(out.performanceMetrics) == Seq(
         ("airline", StringType, true),
